@@ -86,7 +86,12 @@ from osm2geojson_lite_spark.pipeline.text import (  # noqa: E402
     token_counts,
     winnowing_fingerprints,
 )
-from osm2geojson_lite_spark.sources.synth import SPAN_SCHEMA, generate_documents  # noqa: E402
+from osm2geojson_lite_spark.sources.synth import (  # noqa: E402
+    REFERENCE_DATA_DIR,
+    REFERENCE_EXPECTED_DIR,
+    SPAN_SCHEMA,
+    generate_documents,
+)
 from osm2geojson_lite_spark.spatial import (  # noqa: E402
     cell_col,
     cell_parent_col,
@@ -94,9 +99,6 @@ from osm2geojson_lite_spark.spatial import (  # noqa: E402
     pip_join,
     raster_tile_assignment,
 )
-
-REFERENCE_DATA = "/root/reference/test/data"
-REFERENCE_EXPECTED = "/root/reference/test/expected"
 
 # ---------------------------------------------------------------------------
 # Shared deterministic derivations (identical in Spark and DuckDB)
@@ -310,12 +312,12 @@ def q_osm_fixture_parity(spark, sf_dir):
 
     normalize = _normalize
 
-    docs = fixture_documents(spark, REFERENCE_DATA)
+    docs = fixture_documents(spark, REFERENCE_DATA_DIR)
     out = convert(docs, Options(complete_feature=True)).collect()
     got = {r["doc_id"]: r["geojson"] for r in out}
     rows = []
     for name in _fixture_names():
-        with open(os.path.join(REFERENCE_EXPECTED, name + ".geojson"), encoding="utf-8") as f:
+        with open(os.path.join(REFERENCE_EXPECTED_DIR, name + ".geojson"), encoding="utf-8") as f:
             expected = json.load(f)
         ok = normalize(json.loads(got.get(name, "{}"))) == normalize(expected)
         rows.append((name, bool(ok)))
@@ -344,7 +346,7 @@ def q_xml_events(spark, sf_dir):
     from osm2geojson_lite_spark.operators.events import subscribe, xml_events
     from osm2geojson_lite_spark.sources.synth import fixture_documents
 
-    ev = xml_events(assemble_payload(fixture_documents(spark, REFERENCE_DATA)))
+    ev = xml_events(assemble_payload(fixture_documents(spark, REFERENCE_DATA_DIR)))
     out = ev.groupBy(
         F.col("phase").alias("kind"), "path"
     ).agg(F.count(F.lit(1)).alias("n_events"))
@@ -362,7 +364,7 @@ def q_xml_events(spark, sf_dir):
 
 
 def q_osm_relation_geometry(spark, sf_dir):
-    with open(os.path.join(REFERENCE_DATA, "relation.json"), encoding="utf-8") as f:
+    with open(os.path.join(REFERENCE_DATA_DIR, "relation.json"), encoding="utf-8") as f:
         payload = f.read()
     docs = spark.createDataFrame(
         [("relation.json", [{"kind": "text", "text": payload, "media_ref": None, "offset": 0}])],
@@ -2735,9 +2737,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def _fixture_names() -> list[str]:
     return sorted(
-        n for n in os.listdir(REFERENCE_DATA)
-        if os.path.isfile(os.path.join(REFERENCE_DATA, n))
-        and os.path.exists(os.path.join(REFERENCE_EXPECTED, n + ".geojson"))
+        n for n in os.listdir(REFERENCE_DATA_DIR)
+        if os.path.isfile(os.path.join(REFERENCE_DATA_DIR, n))
+        and os.path.exists(os.path.join(REFERENCE_EXPECTED_DIR, n + ".geojson"))
     )
 
 
@@ -2946,7 +2948,7 @@ def oracle_sql() -> dict[str, str]:
 
     fixture_values = ", ".join(f"('{n}', true)" for n in _fixture_names())
 
-    with open(os.path.join(REFERENCE_EXPECTED, "relation.json.geojson"), encoding="utf-8") as f:
+    with open(os.path.join(REFERENCE_EXPECTED_DIR, "relation.json.geojson"), encoding="utf-8") as f:
         golden = json.load(f)
     rel_geom = canonical_json(golden["features"][0]["geometry"]).replace("'", "''")
 

@@ -177,7 +177,6 @@ def convert_with_lineage(docs: DataFrame, output_path: str, lineage_path: str, *
     done = set(log.completed_keys(spark, run_id))
     all_buckets = [b for b in range(n_buckets) if str(b) not in done]
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     in_bucket = bucket_col(F.col("doc_id"), n_buckets)
     jobs = [
         all_buckets[i: i + buckets_per_job]
@@ -220,7 +219,9 @@ def convert_with_lineage(docs: DataFrame, output_path: str, lineage_path: str, *
                         for b in group
                     ],
                 )
-                observed.write.mode("overwrite").partitionBy("bucket").parquet(output_path)
+                (observed.write.mode("overwrite")
+                 .option("partitionOverwriteMode", "dynamic")
+                 .partitionBy("bucket").parquet(output_path))
                 if fail_mid_commit is not None and ji >= fail_mid_commit:
                     raise RuntimeError(
                         f"injected failure after write, before mark_done of job {ji} "

@@ -77,19 +77,6 @@ def _json_str(s) -> str:
     return json.dumps(s, ensure_ascii=False)
 
 
-def _feature_row(doc_id, out_pos, sub_seq, feature: dict) -> dict:
-    geom = feature.get("geometry")
-    return {
-        "doc_id": doc_id,
-        "out_pos": out_pos,
-        "sub_seq": sub_seq,
-        "feature_id": feature.get("id"),
-        "geom_type": geom["type"] if geom else None,
-        "feature_json": canonical_json(feature),
-        "geometry_json": canonical_json(geom),
-    }
-
-
 # ---------------------------------------------------------------------------
 # Node features (A9)
 # ---------------------------------------------------------------------------

@@ -8,6 +8,7 @@ shuffled-hash) per batch.
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
@@ -18,7 +19,7 @@ from .assemble import (
     relation_kernel_stream,
     way_features_kernel,
 )
-from .emit import emit_geojson, feature_collections, first_relation_geometry
+from .emit import emit_geojson
 from .parse import parse_documents
 from .resolve import relation_closure, resolve_graph, visibility_filter
 
@@ -74,11 +75,6 @@ class Options:
     render_tagged: bool = False
     exclude_way: bool = True
     salt: int | None = None  # explicit skew salting for the node-ref join
-    # Materialize each multi-consumer subtree (live+refcounts, way coords,
-    # resolved members) exactly once instead of recomputing it per feature
-    # branch.  At scale recomputing a TB-sized join 2-3x is strictly worse
-    # than one materialization; False restores the recompute-from-parse plan.
-    materialize_intermediates: bool = True
     # --- mega-document bounds (SURVEY §7 hard part 5) ---------------------
     # Two per-group unbounded spots exist in the plan: the relation kernel
     # (groupBy(doc_id, root_inst).applyInPandas loads ONE group fully into
@@ -132,6 +128,37 @@ class MegaDocumentError(RuntimeError):
 _SKIP_LIST_BOUND = 1000
 
 
+def _mega_guard(over: DataFrame, noun: str, cap_name: str, cap: int,
+                policy: str) -> list:
+    """Run one mega-document guard job and apply ``mega_doc_policy``.
+
+    ``over`` holds only the key columns of the items above ``cap``.  Returns
+    their sorted keys (a bare value for one key column, else a tuple) for
+    the caller to drop under policy "skip"; raises ``MegaDocumentError``
+    under "fail", or under "skip" when more than ``_SKIP_LIST_BOUND`` items
+    are over the cap.
+    """
+    rows = over.limit(_SKIP_LIST_BOUND + 1).collect()
+    keys = sorted(r[0] if len(r) == 1 else tuple(r) for r in rows)
+    if not keys:
+        return keys
+    if policy != "skip":
+        raise MegaDocumentError(
+            f"{len(keys)} {noun}(s) exceed {cap_name}={cap} (first: "
+            f"{keys[:10]}); raise the cap or set mega_doc_policy='skip'"
+        )
+    if len(keys) > _SKIP_LIST_BOUND:
+        raise MegaDocumentError(
+            f"more than {_SKIP_LIST_BOUND} {noun}s exceed {cap_name}={cap}; "
+            "the cap is mis-sized for this corpus — refusing to skip them all"
+        )
+    logging.getLogger(__name__).warning(
+        "mega-document skip: dropping %d %s(s) over %s=%d (first: %s)",
+        len(keys), noun, cap_name, cap, keys[:10],
+    )
+    return keys
+
+
 def build_features(
     docs: DataFrame, opts: Options = Options(), scope: CacheScope | None = None
 ) -> dict:
@@ -158,63 +185,38 @@ def build_features(
     if opts.max_doc_instances is None:
         instances.count()
     else:
-        over_docs = (
+        skipped_docs = _mega_guard(
             instances.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > opts.max_doc_instances)
-            .limit(_SKIP_LIST_BOUND + 1)
-            .collect()
+            .filter(F.col("n") > opts.max_doc_instances).select("doc_id"),
+            "document", "max_doc_instances", opts.max_doc_instances,
+            opts.mega_doc_policy,
         )
-        if over_docs:
-            ids = sorted(r["doc_id"] for r in over_docs)
-            if opts.mega_doc_policy != "skip":
-                raise MegaDocumentError(
-                    f"{len(ids)} document(s) exceed max_doc_instances="
-                    f"{opts.max_doc_instances} (first: {ids[:10]}); raise the "
-                    "cap or set mega_doc_policy='skip'"
-                )
-            if len(ids) > _SKIP_LIST_BOUND:
-                raise MegaDocumentError(
-                    f"more than {_SKIP_LIST_BOUND} documents exceed "
-                    f"max_doc_instances={opts.max_doc_instances}; the cap is "
-                    "mis-sized for this corpus — refusing to skip them all"
-                )
-            skipped_docs = ids
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "mega-document skip: dropping %d document(s) over "
-                "max_doc_instances=%d (first: %s)",
-                len(ids), opts.max_doc_instances, ids[:10],
-            )
-            instances = instances.filter(~F.col("doc_id").isin(ids))
+        if skipped_docs:
+            instances = instances.filter(~F.col("doc_id").isin(skipped_docs))
 
     graph = resolve_graph(instances, salt=opts.salt)
-    live = graph["live"]
-    way_coords = graph["way_coords"]
-    members = graph["members"]
-    if opts.materialize_intermediates:
-        # Persist every subtree with >1 consumer so its shuffle executes
-        # exactly once: `live` (probe-count agg + join; read by all three
-        # feature branches), `way_coords` (the J1 explode+join+collect — the
-        # heaviest shuffle; read by way features AND the relation kernel) and
-        # `members` (member-resolution join; read by the relation kernel AND
-        # the closure edges).  Eager materialization populates each cache
-        # before the concurrent downstream stages race on it (a lazily
-        # populated persist makes every first-wave stage re-run the Python
-        # parse, measured ~10x parse core-time).  The three subtrees are
-        # mutually independent, so ONE union-count job materializes all
-        # three caches: the scheduler interleaves their stages freely inside
-        # a single job instead of three barriers.
-        live = scope.persist(live)
-        way_coords = scope.persist(way_coords)
-        members = scope.persist(members)
-        one = F.lit(1).alias("one")
-        (
-            live.select(one)
-            .unionAll(way_coords.select(one))
-            .unionAll(members.select(one))
-            .count()
-        )
+    # Persist every subtree with >1 consumer so its shuffle executes exactly
+    # once: `live` (probe-count agg + join; read by all three feature
+    # branches), `way_coords` (the J1 explode+join+collect — the heaviest
+    # shuffle; read by way features AND the relation kernel) and `members`
+    # (member-resolution join; read by the relation kernel AND the closure
+    # edges).  Eager materialization populates each cache before the
+    # concurrent downstream stages race on it (a lazily populated persist
+    # makes every first-wave stage re-run the Python parse, measured ~10x
+    # parse core-time).  The three subtrees are mutually independent, so ONE
+    # union-count job materializes all three caches: the scheduler
+    # interleaves their stages freely inside a single job instead of three
+    # barriers.
+    live = scope.persist(graph["live"])
+    way_coords = scope.persist(graph["way_coords"])
+    members = scope.persist(graph["members"])
+    one = F.lit(1).alias("one")
+    (
+        live.select(one)
+        .unionAll(way_coords.select(one))
+        .unionAll(members.select(one))
+        .count()
+    )
     visible = visibility_filter(
         live, render_tagged=opts.render_tagged, exclude_way=opts.exclude_way
     )
@@ -269,39 +271,18 @@ def build_features(
         mcounts = members.groupBy("doc_id", "rel_inst").agg(
             F.count(F.lit(1)).alias("mn")
         )
-        over_groups = (
+        skipped_groups = _mega_guard(
             closure.join(mcounts, ["doc_id", "rel_inst"], "left")
             .groupBy("doc_id", "root_inst")
             .agg(F.sum(F.coalesce(F.col("mn"), F.lit(0))).alias("g_rows"))
             .filter(F.col("g_rows") > opts.max_relation_group_rows)
-            .limit(_SKIP_LIST_BOUND + 1)
-            .collect()
+            .select("doc_id", "root_inst"),
+            "relation group", "max_relation_group_rows",
+            opts.max_relation_group_rows, opts.mega_doc_policy,
         )
-        if over_groups:
-            keys = sorted((r["doc_id"], r["root_inst"]) for r in over_groups)
-            if opts.mega_doc_policy != "skip":
-                raise MegaDocumentError(
-                    f"{len(keys)} relation group(s) exceed "
-                    f"max_relation_group_rows={opts.max_relation_group_rows} "
-                    f"(first: {keys[:10]}); raise the cap or set "
-                    "mega_doc_policy='skip'"
-                )
-            if len(keys) > _SKIP_LIST_BOUND:
-                raise MegaDocumentError(
-                    f"more than {_SKIP_LIST_BOUND} relation groups exceed "
-                    f"max_relation_group_rows={opts.max_relation_group_rows}; "
-                    "the cap is mis-sized for this corpus"
-                )
-            skipped_groups = keys
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "mega-document skip: dropping %d relation group(s) over "
-                "max_relation_group_rows=%d (first: %s)",
-                len(keys), opts.max_relation_group_rows, keys[:10],
-            )
+        if skipped_groups:
             drop = F.lit(False)
-            for d, r in keys:
+            for d, r in skipped_groups:
                 drop = drop | (
                     (F.col("doc_id") == d) & (F.col("root_inst") == r)
                 )
@@ -344,11 +325,9 @@ def build_features(
     )
 
     return {
-        "instances": instances,
         "node_features": node_feats,
         "way_features": way_feats,
         "relation_features": rel_feats,
-        "features": node_feats.unionByName(way_feats).unionByName(rel_feats),
         "skipped_docs": skipped_docs,
         "skipped_relation_groups": skipped_groups,
     }

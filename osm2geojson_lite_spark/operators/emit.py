@@ -4,40 +4,12 @@ FeatureCollection assembly is pure JVM-side column work: sorted struct
 collection replays the reference's Map-insertion output order
 (``index.ts:214``) and string concatenation builds the canonical JSON — no
 Python in the hot path. The first-relation bare-geometry mode (P4,
-``index.ts:220-222``) is a window + filter.
+``index.ts:220-222``) is a ``min`` aggregate riding the same shuffle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
-
-
-def feature_collections(doc_ids: DataFrame, features: DataFrame) -> DataFrame:
-    """(doc_id) x features -> (doc_id, geojson) with empty collections for
-    documents yielding no features (``empty.osm`` fixture)."""
-    per_doc = (
-        features.groupBy("doc_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("out_pos", "sub_seq", "feature_json"))
-            ).alias("ordered")
-        )
-        .select(
-            "doc_id",
-            F.array_join(
-                F.transform("ordered", lambda s: s["feature_json"]), ","
-            ).alias("features_csv"),
-        )
-    )
-    # doc_id is unique by input contract — no distinct (saves a shuffle)
-    return doc_ids.select("doc_id").join(per_doc, "doc_id", "left").select(
-        "doc_id",
-        F.concat(
-            F.lit('{"type":"FeatureCollection","features":['),
-            F.coalesce(F.col("features_csv"), F.lit("")),
-            F.lit("]}"),
-        ).alias("geojson"),
-    )
+from pyspark.sql import DataFrame, functions as F
 
 
 def emit_geojson(
@@ -109,15 +81,3 @@ def emit_geojson(
         geojson = F.coalesce(F.col("first_rel")["geometry_json"], collection)
     return per_doc.select("doc_id", geojson.alias("geojson"))
 
-
-def first_relation_geometry(relation_features: DataFrame) -> DataFrame:
-    """P4: per doc, the geometry of the first feature of the first visible
-    relation that produced any features; docs absent here fall back to the
-    full FeatureCollection (reference returns it only when no relation
-    qualified)."""
-    w = Window.partitionBy("doc_id").orderBy("out_pos", "sub_seq")
-    return (
-        relation_features.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", F.col("geometry_json").alias("geojson"))
-    )

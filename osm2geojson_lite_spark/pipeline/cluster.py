@@ -27,9 +27,11 @@ star twice.
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 from pyspark.sql import DataFrame, functions as F
 
-from ..session import wave_aligned
+from ..session import data_sized_shuffle
 from .dedup import minhash_near_duplicates
 
 
@@ -114,23 +116,14 @@ def connected_components(pairs: DataFrame, *, id_a: str = "id_a",
     # is restored before the lazily-evaluated final assignment, which stays
     # on the caller's partitioning.
     spark = pairs.sparkSession
-    cores = spark.sparkContext.defaultParallelism
-    rows_per_partition = 20_000
-
-    def _p(n: int) -> int:
-        target = max(1, n // rows_per_partition)
-        return wave_aligned(target, cores) if target >= cores else int(target)
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if input_rows_hint is not None:
-            spark.conf.set("spark.sql.shuffle.partitions",
-                           str(_p(int(input_rows_hint))))
+    hinted = (data_sized_shuffle(spark, input_rows_hint)
+              if input_rows_hint is not None else nullcontext())
+    with hinted:
         edges = (pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
                  .filter(F.col("u") != F.col("v")).distinct()
                  .localCheckpoint(eager=True))
         digest = _edge_digest(edges)
-        spark.conf.set("spark.sql.shuffle.partitions", str(_p(digest[0])))
+    with data_sized_shuffle(spark, digest[0]):
         for _ in range(max_rounds):
             new = _star_round(_star_round(edges, "large", dedup=False), "small")
             new = new.localCheckpoint(eager=True)
@@ -142,8 +135,6 @@ def connected_components(pairs: DataFrame, *, id_a: str = "id_a",
         else:
             raise RuntimeError(
                 f"connected_components did not converge in {max_rounds} rounds")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     # Star forest: every edge is (member, component_min).  Roots appear
     # only as v; add them (and isolated nodes) as their own component.

@@ -8,8 +8,22 @@ cluster the same conf applies minus master/driver-memory, submitted via
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+
+def driver_memory(env: Mapping[str, str], phys_bytes: int) -> str:
+    """``spark.driver.memory`` for a local session: ``SPARK_DRIVER_MEMORY``
+    when set, else half the host's physical RAM in whole GiB, clamped to
+    1g..48g.  In local mode the driver JVM also hosts the executors, while
+    the Python workers live outside its heap and need the other half; a
+    fixed 48g default got the driver OOM-killed on a 15 GB host."""
+    explicit = env.get("SPARK_DRIVER_MEMORY")
+    if explicit:
+        return explicit
+    return f"{max(1, min(48, phys_bytes // (1 << 30) // 2))}g"
 
 
 def get_spark(app_name: str = "osm2geojson-lite-spark", *, cpus: int | None = None,
@@ -32,7 +46,8 @@ def get_spark(app_name: str = "osm2geojson-lite-spark", *, cpus: int | None = No
         .config("spark.sql.adaptive.enabled", "true" if adaptive else "false")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", driver_memory(
+            os.environ, os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # larger Arrow batches: fewer JVM<->Python round trips per kernel task
@@ -43,11 +58,10 @@ def get_spark(app_name: str = "osm2geojson-lite-spark", *, cpus: int | None = No
         # DRAM-bandwidth-bound in many windows (2->8-core scaling: 0.95
         # frequency-bound vs 0.63 DRAM-bound kernels), where lz4 spends
         # cheap ALU to cut bytes through the memory subsystem: interleaved
-        # A/B at local[8]/24k docs (tools/compress_ab.py) measured
-        # compression-on faster at best-of (+7.6%) and far more stable
-        # (walls 43-62s vs 46-75s).  It is also the cluster-correct
-        # setting - network >> CPU - so local and spark-submit runs now
-        # share one transport config.
+        # A/B at local[8]/24k docs measured compression-on faster at
+        # best-of (+7.6%) and far more stable (walls 43-62s vs 46-75s).
+        # It is also the cluster-correct setting - network >> CPU - so
+        # local and spark-submit runs now share one transport config.
         .config("spark.sql.inMemoryColumnarStorage.compressed", "true")
         .config("spark.shuffle.compress", "true")
         .config("spark.shuffle.spill.compress", "true")
@@ -91,28 +105,6 @@ def wave_aligned(n: int, cores: int) -> int:
     if cores <= 0:
         return max(1, n)
     return max(1, -(-max(1, n) // cores)) * cores
-
-
-def wave_partitions(spark: SparkSession, n_rows: int | None = None, *,
-                    rows_per_partition: int = 1500,
-                    cores: int | None = None) -> int:
-    """Engine default partition count: data-sized, then wave-aligned.
-
-    Sizes partitions by ``rows_per_partition`` (fat enough to amortize
-    per-task overhead) and rounds UP to fill whole scheduling waves of the
-    cluster (``defaultParallelism`` unless ``cores`` pins a specific budget
-    — e.g. a scaling benchmark aligning BOTH legs to the larger leg for
-    plan identity).  This is the automatic form of the partition-count
-    overrides the cluster benchmarks used to pass by hand.
-    """
-    if cores is None:
-        cores = spark.sparkContext.defaultParallelism
-    if n_rows is None:
-        return cores
-    return wave_aligned(n_rows // rows_per_partition, cores)
-
-
-from contextlib import contextmanager
 
 
 @contextmanager

@@ -4,7 +4,7 @@ Two sources of documents, both shaped per BASELINE.json ``input_hint``
 ``(doc_id:string, spans:array<struct<kind,text,media_ref,offset>>)``:
 
 - :func:`fixture_documents` wraps each reference test fixture file
-  (``/root/reference/test/data/*``) as one document, payload split into 1-3
+  (``REFERENCE_DATA_DIR``) as one document, payload split into 1-3
   text spans with 0-2 interleaved media spans (seeded by name — stable).
 - :func:`generate_documents` builds an arbitrary-size corpus of synthetic
   Overpass-JSON documents from the seed only (no wall clock, no external
@@ -21,13 +21,23 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+from pathlib import Path
 
 SPAN_SCHEMA = (
     "doc_id string, spans array<struct<kind:string,text:string,"
     "media_ref:string,offset:int>>"
 )
 
-REFERENCE_DATA_DIR = "/root/reference/test/data"
+# The reference implementation's test directory: ``data/`` holds the input
+# fixtures, ``expected/`` the GeoJSON the reference emits for each.  Taken
+# from OSM2GEOJSON_REFERENCE_TEST, else a ``reference`` checkout next to
+# this repository.
+REFERENCE_TEST_DIR = os.environ.get(
+    "OSM2GEOJSON_REFERENCE_TEST",
+    str(Path(__file__).resolve().parents[3] / "reference" / "test"),
+)
+REFERENCE_DATA_DIR = os.path.join(REFERENCE_TEST_DIR, "data")
+REFERENCE_EXPECTED_DIR = os.path.join(REFERENCE_TEST_DIR, "expected")
 
 
 def _stable_int(key: str, mod: int) -> int:

@@ -74,18 +74,23 @@ def mann_kendall_trend(series: DataFrame, *, cell_col_name: str = "cell",
     """
     if max_buckets <= 1:
         raise ValueError("max_buckets must be > 1")
+    # A NULL bucket has no place on the time axis (and would be a NULL map
+    # key below): refuse it by name wherever the row is first read.
     vals = series.select(
         F.col(cell_col_name).alias("cell"),
-        F.col(bucket_col).cast("long").alias("b"),
+        F.coalesce(F.col(bucket_col).cast("long"), F.raise_error(F.lit(
+            f"mann_kendall_trend: NULL in bucket column {bucket_col!r} — "
+            "drop or fill those rows first")).cast("long")).alias("b"),
         F.col(value_col).cast("long").alias("x"),
     )
 
     # Global analysis frame: one tiny row.  raise_error is ANSI-safe and
     # keeps the fence inside the lazy plan (evaluated once, broadcast).
-    # The isNull disjunct covers EMPTY input: min/max over zero rows are
-    # NULL, which would otherwise fall through to raise_error with a
-    # misleading "exceeds max_buckets" message — an empty frame must pass
-    # through (per_cell is empty too, so the output is simply empty).
+    # The isNull disjunct covers EMPTY input (NULL buckets never get this
+    # far): min/max over zero rows are NULL, which would otherwise fall
+    # through to raise_error with a misleading "exceeds max_buckets"
+    # message — an empty frame must pass through (per_cell is empty too,
+    # so the output is simply empty).
     frame = vals.agg(F.min("b").alias("b0"), F.max("b").alias("b1")).select(
         F.when(
             F.col("b0").isNull()

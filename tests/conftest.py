@@ -1,6 +1,14 @@
 from __future__ import annotations
 
+import os
+
 import pytest
+
+from osm2geojson_lite_spark.sources.synth import REFERENCE_DATA_DIR
+
+#: marks tests that read the reference implementation's fixture files
+needs_reference = pytest.mark.skipif(
+    not os.path.isdir(REFERENCE_DATA_DIR), reason="reference fixtures absent")
 
 
 @pytest.fixture(scope="session")

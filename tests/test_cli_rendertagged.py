@@ -20,12 +20,13 @@ import os
 from pyspark.sql import functions as F
 
 from osm2geojson_lite_spark import Options, convert
-from osm2geojson_lite_spark.sources.synth import SPAN_SCHEMA
+from osm2geojson_lite_spark.sources.synth import (
+    REFERENCE_DATA_DIR,
+    REFERENCE_EXPECTED_DIR,
+    SPAN_SCHEMA,
+)
 
-from .conftest import normalize
-
-REFERENCE_DATA = "/root/reference/test/data"
-REFERENCE_EXPECTED = "/root/reference/test/expected"
+from .conftest import needs_reference, normalize
 
 
 # ---------------------------------------------------------------------------
@@ -123,28 +124,30 @@ def test_untagged_unreferenced_node_still_renders(spark):
 # ---------------------------------------------------------------------------
 
 
+@needs_reference
 def test_cli_single_file_matches_golden(spark, tmp_path):
     from osm2geojson_lite_spark.__main__ import main
 
     out_file = str(tmp_path / "relation.geojson")
-    rc = main([os.path.join(REFERENCE_DATA, "relation.json"), out_file])
+    rc = main([os.path.join(REFERENCE_DATA_DIR, "relation.json"), out_file])
     assert rc == 0
     with open(out_file, encoding="utf-8") as f:
         text = f.read()
     assert text.endswith("\n")  # cli.ts:29 trailing newline
-    with open(os.path.join(REFERENCE_EXPECTED, "relation.json.geojson"),
+    with open(os.path.join(REFERENCE_EXPECTED_DIR, "relation.json.geojson"),
               encoding="utf-8") as f:
         expected = json.load(f)
     assert normalize(json.loads(text)) == normalize(expected)
 
 
+@needs_reference
 def test_cli_directory_mode(spark, tmp_path):
     from osm2geojson_lite_spark.__main__ import main
 
     in_dir = tmp_path / "in"
     in_dir.mkdir()
     for name in ("empty.json", "relation.json"):
-        with open(os.path.join(REFERENCE_DATA, name), encoding="utf-8") as f:
+        with open(os.path.join(REFERENCE_DATA_DIR, name), encoding="utf-8") as f:
             (in_dir / name).write_text(f.read(), encoding="utf-8")
     out_dir = tmp_path / "out"
     rc = main([str(in_dir), str(out_dir)])

@@ -13,15 +13,18 @@ import os
 import pytest
 
 from osm2geojson_lite_spark import Options, convert
-from osm2geojson_lite_spark.sources.synth import fixture_documents
+from osm2geojson_lite_spark.sources.synth import (
+    REFERENCE_DATA_DIR as DATA_DIR,
+    REFERENCE_EXPECTED_DIR as EXPECTED_DIR,
+    fixture_documents,
+)
 
-from .conftest import normalize
+from .conftest import needs_reference, normalize
 
-DATA_DIR = "/root/reference/test/data"
-EXPECTED_DIR = "/root/reference/test/expected"
+pytestmark = needs_reference
 
 FIXTURES = sorted(
-    n for n in os.listdir(DATA_DIR)
+    n for n in (os.listdir(DATA_DIR) if os.path.isdir(DATA_DIR) else [])
     if os.path.isfile(os.path.join(DATA_DIR, n))
     and os.path.exists(os.path.join(EXPECTED_DIR, n + ".geojson"))
 )

@@ -123,3 +123,13 @@ def test_empty_input_passes_through(spark):
     max_buckets raise_error from the NULL min/max frame row."""
     df = spark.createDataFrame([], "cell long, b long, x long")
     assert mann_kendall_trend(df).collect() == []
+
+
+def test_all_null_buckets_rejected_by_name(spark):
+    """All-NULL buckets pass the empty-input disjunct of the frame fence;
+    they must fail with a message naming the column, not as an opaque
+    NULL map-key error."""
+    df = spark.createDataFrame([(1, None, 3), (2, None, 4)],
+                               "cell long, b long, x long")
+    with pytest.raises(Exception, match="NULL in bucket column 'b'"):
+        mann_kendall_trend(df).collect()

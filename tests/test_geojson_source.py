@@ -15,13 +15,13 @@ from osm2geojson_lite_spark import Options, convert
 from osm2geojson_lite_spark.sources.geojson import geojson_features
 from osm2geojson_lite_spark.sources.synth import fixture_documents
 
-DATA_DIR = "/root/reference/test/data"
+from .conftest import needs_reference
 
 
 @pytest.fixture(scope="module")
 def converted(spark):
     """Fixture corpus converted to GeoJSON, kept as a DataFrame."""
-    docs = fixture_documents(spark, DATA_DIR)
+    docs = fixture_documents(spark)
     return convert(docs, Options(complete_feature=True)).persist()
 
 
@@ -46,6 +46,7 @@ def _bbox_py(geom):
     return (min(xs), min(ys), max(xs), max(ys), len(nums) // 2)
 
 
+@needs_reference
 def test_roundtrip_matches_json_oracle(converted, converted_py):
     got = {}
     for r in geojson_features(converted).collect():
@@ -71,6 +72,7 @@ def test_roundtrip_matches_json_oracle(converted, converted_py):
     assert set(got) == want_keys  # no extra, no missing rows
 
 
+@needs_reference
 def test_document_order_preserved(converted, converted_py):
     """feature_idx must reproduce the emitter's document order (O1)."""
     name = next(d for d, fc in converted_py.items()
@@ -110,6 +112,7 @@ def test_negative_and_float_coords(spark):
         -1.5, -4.125, 30.0, 2.25)
 
 
+@needs_reference
 def test_partitioning_invariant(converted):
     a = sorted(map(tuple, geojson_features(converted.repartition(1)).collect()))
     b = sorted(map(tuple, geojson_features(converted.repartition(8)).collect()))

@@ -21,6 +21,7 @@ def test_kill_resume_no_recompute(spark, tmp_path):
     docs = generate_documents(spark, 40).persist()
     out = str(tmp_path / "out")
     lin = str(tmp_path / "lineage")
+    overwrite_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
 
     # run 1: crash after 2 of 4 jobs (8 buckets, 2 per job)
     with pytest.raises(RuntimeError, match="injected failure"):
@@ -40,6 +41,8 @@ def test_kill_resume_no_recompute(spark, tmp_path):
     assert result.count() == 40
     assert result.select("doc_id").distinct().count() == 40  # no recompute dups
     assert set(LineageLog(lin).completed_keys(spark, "run1")) == {str(b) for b in range(8)}
+    # dynamic overwrite is a writer option, not a session setting
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == overwrite_mode
 
     # resumed output identical to a fresh single-shot run
     fresh = {r["doc_id"]: r["geojson"]

@@ -188,25 +188,6 @@ def test_lineage_mid_commit_crash_is_idempotent(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# convert: materialized and recompute plans must emit identical bytes
-# ---------------------------------------------------------------------------
-
-
-def test_materialize_intermediates_output_identical(spark):
-    from osm2geojson_lite_spark import Options, convert
-    from osm2geojson_lite_spark.sources.synth import generate_documents
-
-    docs = generate_documents(spark, 40)
-    on = {r["doc_id"]: r["geojson"] for r in convert(
-        docs, Options(complete_feature=True, materialize_intermediates=True)
-    ).collect()}
-    off = {r["doc_id"]: r["geojson"] for r in convert(
-        docs, Options(complete_feature=True, materialize_intermediates=False)
-    ).collect()}
-    assert on == off and len(on) == 40
-
-
-# ---------------------------------------------------------------------------
 # committed conversion golden must match the current engine output
 # ---------------------------------------------------------------------------
 

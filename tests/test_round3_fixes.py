@@ -5,23 +5,31 @@ in one groupBy)."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
 from osm2geojson_lite_spark import CacheScope, Options, convert
-from osm2geojson_lite_spark.sources.synth import fixture_documents
+from osm2geojson_lite_spark.sources.synth import (
+    REFERENCE_EXPECTED_DIR,
+    fixture_documents,
+)
 
-from .conftest import normalize
-
-DATA_DIR = "/root/reference/test/data"
+from .conftest import needs_reference, normalize
 
 
+def _expected(name: str) -> dict:
+    with open(os.path.join(REFERENCE_EXPECTED_DIR, name + ".geojson")) as f:
+        return json.load(f)
+
+
+@needs_reference
 def test_interleaved_converts_no_cross_unpersist(spark):
     """Two convert() pipelines with explicit scopes interleaved in one
     session: building the second must not unpersist the first's live
     caches, and both outputs stay correct."""
-    docs_a = fixture_documents(spark, DATA_DIR).filter("doc_id = 'relation.json'")
-    docs_b = fixture_documents(spark, DATA_DIR).filter("doc_id = 'route.osm'")
+    docs_a = fixture_documents(spark).filter("doc_id = 'relation.json'")
+    docs_b = fixture_documents(spark).filter("doc_id = 'route.osm'")
 
     with CacheScope() as scope_a, CacheScope() as scope_b:
         out_a = convert(docs_a, Options(complete_feature=True), scope=scope_a)
@@ -36,16 +44,15 @@ def test_interleaved_converts_no_cross_unpersist(spark):
         rows_a = out_a.collect()
         rows_b = out_b.collect()
 
-    with open("/root/reference/test/expected/relation.json.geojson") as f:
-        exp_a = json.load(f)
-    with open("/root/reference/test/expected/route.osm.geojson") as f:
-        exp_b = json.load(f)
-    assert normalize(json.loads(rows_a[0]["geojson"])) == normalize(exp_a)
-    assert normalize(json.loads(rows_b[0]["geojson"])) == normalize(exp_b)
+    assert normalize(json.loads(rows_a[0]["geojson"])) == normalize(
+        _expected("relation.json"))
+    assert normalize(json.loads(rows_b[0]["geojson"])) == normalize(
+        _expected("route.osm"))
 
 
+@needs_reference
 def test_scope_release_unpersists(spark):
-    docs = fixture_documents(spark, DATA_DIR).filter("doc_id = 'way.json'")
+    docs = fixture_documents(spark).filter("doc_id = 'way.json'")
     scope = CacheScope()
     convert(docs, Options(complete_feature=True), scope=scope).collect()
     cached = list(scope._cached)
@@ -55,16 +62,16 @@ def test_scope_release_unpersists(spark):
         assert df.storageLevel.useMemory is False
 
 
+@needs_reference
 def test_fused_emit_default_mode_matches_reference(spark):
     """Default mode through the fused emit: relation docs yield the first
     relation's bare geometry; feature-less docs yield an empty collection."""
-    docs = fixture_documents(spark, DATA_DIR).filter(
+    docs = fixture_documents(spark).filter(
         "doc_id in ('relation.json', 'empty.json')"
     )
     out = {r["doc_id"]: json.loads(r["geojson"])
            for r in convert(docs, Options(complete_feature=False)).collect()}
-    with open("/root/reference/test/expected/relation.json.geojson") as f:
-        exp = json.load(f)
+    exp = _expected("relation.json")
     # bare geometry == geometry of the first feature of the full collection
     assert normalize(out["relation.json"]) == normalize(exp["features"][0]["geometry"])
     assert out["empty.json"] == {"type": "FeatureCollection", "features": []}

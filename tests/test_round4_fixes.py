@@ -18,6 +18,8 @@ from osm2geojson_lite_spark.pipeline.similarity import (
     sign_lsh_topk,
 )
 
+from .conftest import needs_reference
+
 EMB = "/root/testdata/sf0.01/embeddings.parquet"
 
 
@@ -253,13 +255,14 @@ def test_mega_relation_group_skip(spark):
     assert rel_feats == []
 
 
+@needs_reference
 def test_default_caps_do_not_trigger(spark):
     """The default caps are far above any real fixture: fixture conversion
     output is byte-identical with bounds on vs off."""
     from osm2geojson_lite_spark import Options, convert
     from osm2geojson_lite_spark.sources.synth import fixture_documents
 
-    docs = fixture_documents(spark, "/root/reference/test/data").filter(
+    docs = fixture_documents(spark).filter(
         "doc_id in ('relation.json', 'map.osm', 'route.osm')"
     ).persist()
     on = {r["doc_id"]: r["geojson"]

@@ -20,10 +20,10 @@ from osm2geojson_lite_spark.operators.events import (
     subscribe,
     xml_events,
 )
-from osm2geojson_lite_spark.sources.synth import fixture_documents
+from osm2geojson_lite_spark.sources.synth import REFERENCE_DATA_DIR as DATA, fixture_documents
 from osm2geojson_lite_spark.operators.convert import assemble_payload
 
-DATA = "/root/reference/test/data"
+from .conftest import needs_reference
 
 
 # --- independent reference scanner (xmlparser.ts:35-109 re-read) -----------
@@ -68,6 +68,7 @@ def _xml_fixture_names():
     return sorted(n for n in os.listdir(DATA) if n.endswith(".osm"))
 
 
+@needs_reference
 def test_event_stream_matches_reference_scan(spark):
     docs = fixture_documents(spark)
     got = (

@@ -246,45 +246,38 @@ def convert_runtime_audit(spark) -> str:
     subtrees are persisted — the formatted output re-prints a cached
     relation's entire build plan at every InMemoryTableScan that references
     it.  What the cluster actually pays is *executed* stages, so count those
-    via the status tracker, with materialization on vs off.
+    via the status tracker.
     """
     from osm2geojson_lite_spark import Options, convert
     from osm2geojson_lite_spark.sources.synth import generate_documents
 
     sc = spark.sparkContext
-    lines = []
-    for arm, mat in (("materialize_intermediates=True", True),
-                     ("materialize_intermediates=False", False)):
-        group = f"audit-{mat}"
-        sc.setJobGroup(group, group)
-        docs = generate_documents(spark, 400, partitions=8)
-        convert(docs, Options(complete_feature=True,
-                              materialize_intermediates=mat)).write.format(
-            "noop").mode("overwrite").save()
-        sc.setJobGroup("", "")
-        st = sc.statusTracker()
-        jids = st.getJobIdsForGroup(group)
-        stage_ids = set()
-        for j in jids:
-            ji = st.getJobInfo(j)
-            if ji:
-                stage_ids.update(ji.stageIds)
-        executed = 0
-        tasks = 0
-        for sid in stage_ids:
-            si = st.getStageInfo(sid)
-            if si and (si.numCompletedTasks or si.numActiveTasks or si.numFailedTasks):
-                executed += 1
-                tasks += si.numCompletedTasks
-        lines.append(
-            f"- {arm}: {len(jids)} jobs, {executed} executed stages "
-            f"(of {len(stage_ids)} scheduled; the rest skipped = reused "
-            f"exchange/cache outputs), {tasks} tasks"
-        )
+    group = "audit-convert"
+    sc.setJobGroup(group, group)
+    docs = generate_documents(spark, 400, partitions=8)
+    convert(docs, Options(complete_feature=True)).write.format(
+        "noop").mode("overwrite").save()
+    sc.setJobGroup("", "")
+    st = sc.statusTracker()
+    jids = st.getJobIdsForGroup(group)
+    stage_ids = set()
+    for j in jids:
+        ji = st.getJobInfo(j)
+        if ji:
+            stage_ids.update(ji.stageIds)
+    executed = 0
+    tasks = 0
+    for sid in stage_ids:
+        si = st.getStageInfo(sid)
+        if si and (si.numCompletedTasks or si.numActiveTasks or si.numFailedTasks):
+            executed += 1
+            tasks += si.numCompletedTasks
     return (
         "## convert — runtime stage audit (400 docs, noop sink)\n\n"
-        + "\n".join(lines)
-        + "\n\nExecuted stages are the scale tax a real cluster pays per"
+        f"- {len(jids)} jobs, {executed} executed stages (of {len(stage_ids)}"
+        " scheduled; the rest skipped = reused exchange/cache outputs),"
+        f" {tasks} tasks\n"
+        "\nExecuted stages are the scale tax a real cluster pays per"
         " conversion; the static exchange counts below double-count cached"
         " subtree build plans re-printed at each InMemoryTableScan.\n"
     )

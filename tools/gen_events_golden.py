@@ -20,9 +20,9 @@ from collections import Counter
 
 sys.path.insert(0, "/root/repo")
 
+from osm2geojson_lite_spark.sources.synth import REFERENCE_DATA_DIR as DATA  # noqa: E402
 from tests.test_xml_events import _ref_events  # noqa: E402
 
-DATA = "/root/reference/test/data"
 OUT = "/root/repo/tests/golden/xml_events_counts.json"
 
 def _as_num(v):
