@@ -1,14 +1,16 @@
 """Assembly stage: resolved graph -> GeoJSON feature rows.
 
-Three Arrow-batched kernels (SURVEY.md §2.4 A5-A9, §2.3 J5/J7):
+Feature assembly (SURVEY.md §2.4 A5-A9, §2.3 J5/J7):
 - node features (``node.ts:19-32``) — Point emission with props∪tags merge
-  (tags win, ``osm-object.ts:50-52``).
+  (tags win, ``osm-object.ts:50-52``): :func:`point_feature_json`, which the
+  parse kernel calls once per node, so the conversion emits Points with a
+  plain column projection and no kernel stage.
 - way features (``way.ts:57-100``) — LineString, upgraded to CCW Polygon when
   the polytag fold says polygon and the float ring closes.
 - relation features (``relation.ts:108-243``) — per-(doc, root-relation)
-  ``applyInPandas`` group: memoized super-relation flatten, greedy endpoint
-  stitching, winding normalization, inner→outer containment, and the
-  polygons→strings→points emission order.
+  groups of a sorted ``mapInPandas`` stream: memoized super-relation
+  flatten, greedy endpoint stitching, winding normalization, inner→outer
+  containment, and the polygons→strings→points emission order.
 
 All kernels return feature rows ``(doc_id, out_pos, sub_seq, feature_id,
 geom_type, feature_json, geometry_json)``; ordering columns replay the
@@ -18,10 +20,11 @@ reference's Map-insertion output order after Spark shuffles.
 from __future__ import annotations
 
 import json
+from json.encoder import encode_basestring as _json_str
 from typing import Iterator
 
 from ..functions.geometry import is_ring, point_inside_polygon, ring_direction
-from ..functions.jsnumber import canonical_json, parse_float_js
+from ..functions.jsnumber import canonical_json, json_number, parse_float_js
 from ..functions.polytags import classify_is_polygon
 from .stitch import WayCollection
 
@@ -53,30 +56,6 @@ def merged_props_json(props_json: str, tags_json: str) -> str:
     return canonical_json(merge_props(props_json, tags_json))
 
 
-def _fmt_float(f: float) -> str:
-    """JSON.stringify of a JS number: integral -> int form, NaN/inf -> null."""
-    if f != f or f in (_INF, _NINF):
-        return "null"
-    if f == int(f) and -1e15 < f < 1e15:
-        return str(int(f))
-    return repr(f)
-
-
-_INF = float("inf")
-_NINF = float("-inf")
-
-
-def _json_str(s) -> str:
-    """Quoted JSON string for a feature id.  Composite ids are ``type/num``
-    in practice, but ids flow in from untrusted payloads — escape whenever a
-    character would break the hand-assembled JSON envelope."""
-    if isinstance(s, str) and '"' not in s and "\\" not in s and not any(
-        ord(c) < 0x20 for c in s
-    ):
-        return f'"{s}"'
-    return json.dumps(s, ensure_ascii=False)
-
-
 # ---------------------------------------------------------------------------
 # Node features (A9)
 # ---------------------------------------------------------------------------
@@ -94,33 +73,35 @@ def build_node_feature(composite, props_json, tags_json, lon, lat) -> dict:
     }
 
 
+def point_feature_json(composite, props_json, lon, lat) -> str:
+    """Point feature JSON by direct string assembly — byte-identical to
+    ``canonical_json(build_node_feature(...))`` (pinned by a unit test)
+    without the per-row JSON round-trip.  ``props_json`` is the canonical
+    merged properties (:func:`merged_props_json`); ``lon``/``lat`` are the
+    coordinate tokens."""
+    return (f'{{"type":"Feature","id":{_json_str(composite)},"properties":{props_json},'
+            f'"geometry":{{"type":"Point","coordinates":['
+            f"{json_number(parse_float_js(lon))},{json_number(parse_float_js(lat))}]}}}}")
+
+
 def node_features_kernel(batches) -> Iterator:
-    """Point emission by direct string assembly — byte-identical to
-    ``canonical_json(build_node_feature(...))`` (pinned by a unit test) but
-    without the per-row JSON round-trip."""
+    """``mapInPandas`` body emitting one Point feature row per node row
+    (``geometry_json`` NULL: emit reads it only for relation rows).
+    ``convert`` takes the parse-time ``point_json`` column instead."""
     import pandas as pd
 
     for pdf in batches:
-        out = {k: [] for k in _FEATURE_COLS}
-        for doc_id, out_pos, comp, pj, tj, lon, lat in zip(
-            pdf["doc_id"], pdf["out_pos"], pdf["composite"], pdf["props_json"],
-            pdf["tags_json"], pdf["lon"], pdf["lat"],
-        ):
-            props = merged_props_json(pj, tj)
-            geom = (f'{{"type":"Point","coordinates":['
-                    f"{_fmt_float(parse_float_js(lon))},"
-                    f"{_fmt_float(parse_float_js(lat))}]}}")
-            out["doc_id"].append(doc_id)
-            out["out_pos"].append(out_pos)
-            out["sub_seq"].append(0)
-            out["feature_id"].append(comp)
-            out["geom_type"].append("Point")
-            out["feature_json"].append(
-                f'{{"type":"Feature","id":{_json_str(comp)},"properties":{props},'
-                f'"geometry":{geom}}}'
-            )
-            out["geometry_json"].append(geom)
-        yield pd.DataFrame(out, columns=_FEATURE_COLS)
+        feats = [
+            point_feature_json(comp, merged_props_json(pj, tj), lon, lat)
+            for comp, pj, tj, lon, lat in zip(
+                pdf["composite"], pdf["props_json"], pdf["tags_json"],
+                pdf["lon"], pdf["lat"])
+        ]
+        yield pd.DataFrame({
+            "doc_id": pdf["doc_id"], "out_pos": pdf["out_pos"], "sub_seq": 0,
+            "feature_id": pdf["composite"], "geom_type": "Point",
+            "feature_json": feats, "geometry_json": None,
+        }, columns=_FEATURE_COLS)
 
 
 # ---------------------------------------------------------------------------
@@ -170,7 +151,7 @@ def way_features_kernel(batches) -> Iterator:
                 if ring_direction(coords) != "counterclockwise":
                     coords.reverse()
             pts = ",".join(
-                f"[{_fmt_float(x)},{_fmt_float(y)}]" for x, y in coords
+                f"[{json_number(x)},{json_number(y)}]" for x, y in coords
             )
             if geom_type == "Polygon":
                 geom = f'{{"type":"Polygon","coordinates":[[{pts}]]}}'

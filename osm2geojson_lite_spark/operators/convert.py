@@ -13,12 +13,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
-from .assemble import (
-    FEATURE_SCHEMA,
-    node_features_kernel,
-    relation_kernel_stream,
-    way_features_kernel,
-)
+from .assemble import FEATURE_SCHEMA, relation_kernel_stream, way_features_kernel
 from .emit import emit_geojson
 from .parse import parse_documents
 from .resolve import relation_closure, resolve_graph, visibility_filter
@@ -222,10 +217,18 @@ def build_features(
     )
 
     # --- node features -----------------------------------------------------
+    # The parse kernel already built each node's Point feature (point_json),
+    # so this branch is a projection: no Python stage.  geometry_json stays
+    # NULL because emit reads it only for relation rows.
     node_feats = (
         visible.filter((F.col("etype") == "node") & F.col("latlng_set"))
-        .select("doc_id", "out_pos", "composite", "props_json", "tags_json", "lon", "lat")
-        .mapInPandas(node_features_kernel, schema=FEATURE_SCHEMA)
+        .select(
+            "doc_id", "out_pos", F.lit(0).alias("sub_seq"),
+            F.col("composite").alias("feature_id"),
+            F.lit("Point").alias("geom_type"),
+            F.col("point_json").alias("feature_json"),
+            F.lit(None).cast("string").alias("geometry_json"),
+        )
     )
 
     # --- way features ------------------------------------------------------

@@ -31,6 +31,7 @@ import re
 from typing import Iterator
 
 from ..functions.jsnumber import canonical_json, js_str, parse_float_js
+from .assemble import point_feature_json
 
 # ---------------------------------------------------------------------------
 # JS-semantics helpers
@@ -434,8 +435,14 @@ def _parse_into(doc_id, payload: str, out: dict) -> None:
         out["lon"].append(rec["lon"])
         # canonical (JSON.stringify-compatible) so downstream kernels can
         # concatenate these strings into feature JSON without a re-parse
-        out["props_json"].append(canonical_json(rec["props"]))
-        out["tags_json"].append(canonical_json(rec["tags"]))
+        props, tags = rec["props"], rec["tags"]
+        props_json = canonical_json(props)
+        out["props_json"].append(props_json)
+        out["tags_json"].append(canonical_json(tags))
+        # a node's whole Point feature, so emission is a column projection
+        out["point_json"].append(point_feature_json(
+            comp, canonical_json({**props, **tags}) if tags else props_json,
+            rec["lon"], rec["lat"]) if rec["latlng_set"] else None)
         out["tag_events_json"].append(
             json.dumps(rec["tag_events"], ensure_ascii=False))
         out["roles_json"].append(json.dumps(
@@ -467,14 +474,14 @@ INSTANCE_SCHEMA = (
     "member_created boolean, has_tag boolean, latlng_set boolean, "
     "lat string, lon string, props_json string, tags_json string, "
     "tag_events_json string, roles_json string, way_slots_json string, "
-    "members_json string, bounds_json string"
+    "members_json string, bounds_json string, point_json string"
 )
 
 _INSTANCE_COLS = [
     "doc_id", "inst", "etype", "eid", "composite", "is_live", "out_pos",
     "member_created", "has_tag",
     "latlng_set", "lat", "lon", "props_json", "tags_json", "tag_events_json",
-    "roles_json", "way_slots_json", "members_json", "bounds_json",
+    "roles_json", "way_slots_json", "members_json", "bounds_json", "point_json",
 ]
 
 

@@ -16,8 +16,9 @@ Operators implemented here:
 - J6 reference counting (``way.ts:32``, ``relation.ts:37,52,60,66,91,97``) —
   pre-aggregated probe counts joined back to live instances, plus the
   member-creation self-increment.
-- A3 super-relation closure (``relation.ts:161-184``) — iterative self-join,
-  depth-capped (the reference would recurse forever on membership cycles).
+- A3 super-relation closure (``relation.ts:161-184``) — a visited-set BFS
+  per document over one sorted stream (the reference would recurse forever
+  on membership cycles).
 
 Scale notes: every join is an equi-join keyed ``(doc_id, …)``; documents never
 cross-contaminate, so salting a hot document (mega-relation) is safe — see
@@ -32,8 +33,6 @@ from pyspark.sql import DataFrame, functions as F
 
 WAY_SLOTS_T = "array<struct<p:int,ref:string,lon:string,lat:string>>"
 MEMBERS_T = "array<struct<p:int,mtype:string,kind:string,ref:string,inst:bigint,role:string>>"
-
-MAX_RELATION_DEPTH = 16
 
 
 def resolve_graph(instances: DataFrame, *, salt: int | None = None) -> dict:
@@ -61,7 +60,7 @@ def resolve_graph(instances: DataFrame, *, salt: int | None = None) -> dict:
     live = inst.filter(F.col("is_live")).select(
         "doc_id", "composite", "inst", "etype", "out_pos",
         "member_created", "has_tag", "latlng_set", "lat", "lon",
-        "props_json", "tags_json", "tag_events_json",
+        "props_json", "tags_json", "tag_events_json", "point_json",
     )
     live_keyed = live.select(
         "doc_id", "composite",
@@ -190,36 +189,24 @@ def visibility_filter(live_rc: DataFrame, *, render_tagged: bool, exclude_way: b
     return live_rc.filter(~skip)
 
 
-def relation_closure(roots: DataFrame, edges: DataFrame, *, max_depth: int = MAX_RELATION_DEPTH) -> DataFrame:
-    """A3: transitive closure root -> reachable relation.
+CLOSURE_SCHEMA = "doc_id string, root_inst long, rel_inst long"
 
-    One cogrouped Arrow kernel over HASH BUCKETS of documents (documents
-    are independent universes, so the closure never crosses ``doc_id`` —
-    the per-bucket adjacency is keyed by (doc_id, parent) so buckets can
-    hold many documents without cross-talk): BFS from each root over its
-    own doc's relation->relation edge list, visited-set cycle-safe (the
-    reference would blow its stack on cycles, ``relation.ts:172-174``).
-    A single shuffle on the bucket key; no driver-side iteration.  The
-    edge groups are relation metadata only — tiny even for mega-documents.
-    Bucketing by ``pmod(xxhash64(doc_id), ~16x shuffle partitions)``
-    instead of by raw ``doc_id`` cuts the Python call + pandas-frame
-    overhead from one-per-document to one-per-bucket (a corpus of tiny
-    documents paid ~1 call per doc), while the 16x key multiple keeps the
-    bucket hash spreading evenly over reducers.
 
-    Output order is irrelevant (a set): the relation kernel re-derives the
-    reference's member ordering from its own memoized DFS.
-    """
+def _closure_stream(batches):
+    """``mapInPandas`` body over (doc_id, src, dst, is_root) rows sorted by
+    ``doc_id`` (an edge src -> dst, or a root with src = dst): holds one document's roots and adjacency at a time (a
+    document that straddles an Arrow batch carries into the next one) and
+    emits, per root, every relation reachable from it, root included.
+    Visited-set BFS, cycle-safe (the reference would blow its stack on
+    cycles, ``relation.ts:172-174``)."""
     import pandas as pd
 
-    def closure_fn(key, roots_pdf, edges_pdf):
-        adj: dict[tuple, list[int]] = {}
-        for d, p, c in zip(edges_pdf["edge_doc_id"], edges_pdf["parent_inst"],
-                           edges_pdf["child_inst"]):
-            adj.setdefault((d, int(p)), []).append(int(c))
-        out_doc, out_root, out_rel = [], [], []
-        for doc_id, root in zip(roots_pdf["doc_id"], roots_pdf["root_inst"]):
-            root = int(root)
+    out_doc: list = []
+    out_root: list = []
+    out_rel: list = []
+
+    def flush(doc_id, roots, adj):
+        for root in roots:
             seen = {root}
             stack = [root]
             while stack:
@@ -227,27 +214,59 @@ def relation_closure(roots: DataFrame, edges: DataFrame, *, max_depth: int = MAX
                 out_doc.append(doc_id)
                 out_root.append(root)
                 out_rel.append(cur)
-                for nxt in adj.get((doc_id, cur), ()):
+                for nxt in adj.get(cur, ()):
                     if nxt not in seen:
                         seen.add(nxt)
                         stack.append(nxt)
-        return pd.DataFrame(
-            {"doc_id": out_doc, "root_inst": out_root, "rel_inst": out_rel}
-        )
 
-    # rename the edge-side key: both frames descend from the same instances
-    # lineage and Spark's ambiguous-self-join check rejects shared attributes
-    edges_r = edges.select(
-        F.col("doc_id").alias("edge_doc_id"), "parent_inst", "child_inst"
-    )
-    spark = roots.sparkSession
-    n_buckets = max(64, 16 * int(spark.conf.get("spark.sql.shuffle.partitions")))
-    bucket = lambda c: F.pmod(F.xxhash64(c), F.lit(n_buckets))  # noqa: E731
+    def take():
+        pdf = pd.DataFrame({"doc_id": out_doc, "root_inst": out_root,
+                            "rel_inst": out_rel})
+        for col in (out_doc, out_root, out_rel):
+            col.clear()
+        return pdf
+
+    doc, roots, adj = None, [], {}
+    for pdf in batches:
+        for d, src, dst, is_root in zip(pdf["doc_id"], pdf["src"].tolist(),
+                                        pdf["dst"].tolist(), pdf["is_root"]):
+            if d != doc:
+                flush(doc, roots, adj)
+                doc, roots, adj = d, [], {}
+            if is_root:
+                roots.append(src)
+            else:
+                adj.setdefault(src, []).append(dst)
+        if out_doc:
+            yield take()
+    flush(doc, roots, adj)
+    if out_doc:
+        yield take()
+
+
+def relation_closure(roots: DataFrame, edges: DataFrame) -> DataFrame:
+    """A3: transitive closure root -> reachable relation, as
+    ``(doc_id, root_inst, rel_inst)``.
+
+    Documents are independent universes, so the closure never crosses
+    ``doc_id``: roots and relation->relation edges are tagged, unioned,
+    hash-partitioned and sorted by ``doc_id``, and one ``mapInPandas``
+    stream per partition runs the BFS (:func:`_closure_stream`) — one Python
+    task per shuffle partition, the pattern of the relation kernel stream.
+    The edges are relation metadata only, tiny even for mega-documents.
+
+    Output order is irrelevant (a set): the relation kernel re-derives the
+    reference's member ordering from its own memoized DFS.
+    """
+    tagged = roots.select(
+        "doc_id", F.col("root_inst").alias("src"),
+        F.col("root_inst").alias("dst"), F.lit(True).alias("is_root"),
+    ).unionByName(edges.select(
+        "doc_id", F.col("parent_inst").alias("src"),
+        F.col("child_inst").alias("dst"), F.lit(False).alias("is_root"),
+    ))
     return (
-        roots.select("doc_id", "root_inst")
-        .withColumn("_b", bucket(F.col("doc_id")))
-        .groupBy("_b")
-        .cogroup(edges_r.withColumn("_b", bucket(F.col("edge_doc_id")))
-                 .groupBy("_b"))
-        .applyInPandas(closure_fn, schema="doc_id string, root_inst long, rel_inst long")
+        tagged.repartition("doc_id")
+        .sortWithinPartitions("doc_id")
+        .mapInPandas(_closure_stream, schema=CLOSURE_SCHEMA)
     )

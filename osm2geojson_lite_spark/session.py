@@ -8,6 +8,7 @@ cluster the same conf applies minus master/driver-memory, submitted via
 from __future__ import annotations
 
 import os
+import warnings
 from collections.abc import Mapping
 from contextlib import contextmanager
 
@@ -24,6 +25,15 @@ def driver_memory(env: Mapping[str, str], phys_bytes: int) -> str:
     if explicit:
         return explicit
     return f"{max(1, min(48, phys_bytes // (1 << 30) // 2))}g"
+
+
+# One conversion compiles about 150 whole-stage and expression classes,
+# more than Spark's default 100-entry codegen cache holds, so every pass
+# used to evict and recompile its own classes (Janino took 0.4-0.7 s of a
+# 3.3 s pass at local[2] on a 4-vCPU VM).  With room for several
+# conversions' working sets, passes after the first compile nothing.  A
+# static conf: it only takes effect on a session get_spark creates.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(app_name: str = "osm2geojson-lite-spark", *, cpus: int | None = None,
@@ -50,6 +60,7 @@ def get_spark(app_name: str = "osm2geojson-lite-spark", *, cpus: int | None = No
             os.environ, os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # larger Arrow batches: fewer JVM<->Python round trips per kernel task
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Compression ON everywhere (round 5; rounds 2-4 ran local with it
@@ -81,12 +92,19 @@ def get_spark(app_name: str = "osm2geojson-lite-spark", *, cpus: int | None = No
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     actual_master = spark.sparkContext.master
     if actual_master != f"local[{cpus}]":
-        import warnings
-
         warnings.warn(
             f"get_spark requested local[{cpus}] but reused an existing session "
             f"on {actual_master}; core budget differs (stop() it first for a "
             f"pinned run)",
+            stacklevel=2,
+        )
+    codegen_entries = int(spark.conf.get("spark.sql.codegen.cache.maxEntries"))
+    if codegen_entries < CODEGEN_CACHE_ENTRIES:
+        warnings.warn(
+            f"get_spark reused an existing session whose codegen cache holds "
+            f"{codegen_entries} entries, fewer than {CODEGEN_CACHE_ENTRIES}; "
+            f"every conversion will recompile its generated classes (stop() "
+            f"it first)",
             stacklevel=2,
         )
     spark.sparkContext.setLogLevel("WARN")

@@ -47,6 +47,7 @@ def test_fast_path_feature_assembly_matches_canonical():
          '{"name":"café","amenity":"café"}', "7", "-0.25"),
         ('node/3', '{"id":"node/3"}', "{}", "abc", "1e3"),  # NaN lon
         ('node/4', '{"id":"node/4","version":7}', "{}", "-180", "90"),
+        ('node/5', '{"id":"node/5"}', "{}", "0.00001", "-1e-7"),  # near the origin
     ]
     pdf = pd.DataFrame({
         "doc_id": ["d"] * len(node_cases),
@@ -61,6 +62,7 @@ def test_fast_path_feature_assembly_matches_canonical():
     for i, (comp, pj, tj, lon, lat) in enumerate(node_cases):
         want = canonical_json(build_node_feature(comp, pj, tj, lon, lat))
         assert got["feature_json"].iloc[i] == want, comp
+    assert got["feature_json"].iloc[4].endswith('"coordinates":[0.00001,-1e-7]}}')
 
     way_cases = [
         # open line

@@ -21,12 +21,16 @@ from __future__ import annotations
 import json
 import math
 import re
+import shutil
+import subprocess
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from osm2geojson_lite_spark.functions.geometry import ring_direction
 from osm2geojson_lite_spark.functions.jsnumber import (
     canonical_json,
+    js_number,
     js_str,
     parse_float_js,
 )
@@ -144,6 +148,61 @@ def test_js_str_roundtrips(v):
     assert float(s) == v
     if v == int(v) and abs(v) < 1e21:
         assert "." not in s and "e" not in s  # integral collapse, JS parity
+
+
+NODE = shutil.which("node")
+needs_node = pytest.mark.skipif(NODE is None, reason="node (JS reference) absent")
+
+
+def _node_map(fn: str, values: list) -> list:
+    """``values.map(fn)`` evaluated by node; values travel as JSON."""
+    script = ("const a=JSON.parse(require('fs').readFileSync(0,'utf8'));"
+              f"process.stdout.write(JSON.stringify(a.map({fn})))")
+    out = subprocess.run([NODE, "-e", script], input=json.dumps(values),
+                         capture_output=True, text=True, check=True, timeout=60)
+    return json.loads(out.stdout)
+
+
+@needs_node
+@given(st.lists(st.floats(allow_nan=False, allow_infinity=False, width=64),
+                min_size=1, max_size=200))
+@settings(max_examples=40, deadline=None)
+def test_js_number_matches_node(values):
+    assert [js_number(v) for v in values] == _node_map("String", values)
+
+
+# JSON values whose JS and Python readings agree: no lone surrogates, ints
+# a double holds exactly, and no array-index-like keys (JS objects list
+# those first, whatever the insertion order)
+_json_leaf = st.one_of(
+    st.floats(allow_nan=False, allow_infinity=False), st.booleans(), st.none(),
+    st.integers(-(2**53), 2**53), st.text(st.characters(blacklist_categories=("Cs",)), max_size=8))
+_json_value = st.recursive(_json_leaf, lambda kids: st.one_of(
+    st.lists(kids, max_size=4),
+    st.dictionaries(st.from_regex(r"[a-z_:]{1,6}", fullmatch=True), kids, max_size=4)),
+    max_leaves=12)
+
+
+@needs_node
+@given(st.lists(_json_value, min_size=1, max_size=20))
+@settings(max_examples=40, deadline=None)
+def test_canonical_json_matches_node_stringify(objs):
+    assert [canonical_json(o) for o in objs] == _node_map("x => JSON.stringify(x)", objs)
+
+
+@pytest.mark.parametrize("x, want", [
+    (0.00001, "0.00001"), (1e-7, "1e-7"), (1.5e16, "15000000000000000"),
+    (1e21, "1e+21"), (-0.0, "0"), (2.0 ** 60, "1152921504606847000"),
+])
+def test_js_number_fixed_cases(x, want):
+    assert js_number(x) == want
+    assert js_str(x) == want
+    assert canonical_json([x]) == f"[{want}]"
+
+
+def test_non_finite_numbers_are_json_null():
+    assert canonical_json({"a": math.nan, "b": [math.inf, -math.inf]}) == '{"a":null,"b":[null,null]}'
+    assert js_number(math.nan) == "NaN" and js_number(-math.inf) == "-Infinity"
 
 
 @given(st.floats(min_value=-1e9, max_value=1e9, allow_nan=False))
@@ -278,6 +337,8 @@ def test_parse_never_raises_on_adversarial_osm(payload):
     for r in rows:
         json.loads(r["props_json"])
         json.loads(r["tags_json"])
+        if r["point_json"] is not None:
+            json.loads(r["point_json"])
 
 
 # ---------------------------------------------------------------------------

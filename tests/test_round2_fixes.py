@@ -5,6 +5,7 @@ session conf enforcement."""
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 import pandas as pd
 import pytest
@@ -203,7 +204,8 @@ def test_convert_corpus_golden_still_current(spark):
     from osm2geojson_lite_spark import Options, convert
     from osm2geojson_lite_spark.sources.synth import generate_documents
 
-    with open("/root/repo/tests/golden/convert_corpus_100.json", encoding="utf-8") as f:
+    with open(Path(__file__).parent / "golden" / "convert_corpus_100.json",
+              encoding="utf-8") as f:
         golden = {d: (n, h) for d, n, h in _json.load(f)}
     sample_ids = sorted(golden)[:12]
     docs = generate_documents(spark, 100).filter(F.col("doc_id").isin(sample_ids))

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+from pathlib import Path
 
 import pytest
 
@@ -188,7 +189,7 @@ def test_kmeans_centroids_match_golden(spark):
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     got = kmeans_centroids(emb, n_centroids=16, n_iters=20, sample_size=512,
                            seed=0)
-    with open("/root/repo/tests/golden/ivf_centroids.json") as f:
+    with open(Path(__file__).parent / "golden" / "ivf_centroids.json") as f:
         golden = _json.load(f)
     assert len(got) == len(golden) == 16
     for c, (g_vec, o_vec) in enumerate(zip(got, golden)):

@@ -18,7 +18,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -26,7 +27,7 @@ from osm2geojson_lite_spark import Options, convert  # noqa: E402
 from osm2geojson_lite_spark.session import get_spark  # noqa: E402
 from osm2geojson_lite_spark.sources.synth import generate_documents  # noqa: E402
 
-OUT = "/root/repo/tests/golden/convert_corpus_100.json"
+OUT = os.path.join(ROOT, "tests", "golden", "convert_corpus_100.json")
 
 
 def main() -> None:

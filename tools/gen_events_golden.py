@@ -18,12 +18,13 @@ import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from osm2geojson_lite_spark.sources.synth import REFERENCE_DATA_DIR as DATA  # noqa: E402
 from tests.test_xml_events import _ref_events  # noqa: E402
 
-OUT = "/root/repo/tests/golden/xml_events_counts.json"
+OUT = os.path.join(ROOT, "tests", "golden", "xml_events_counts.json")
 
 def _as_num(v):
     """Mirror the engine's cast-to-double semantics: a non-numeric attribute
