@@ -741,8 +741,10 @@ def q_line_simplify(spark, sf_dir):
     """Douglas-Peucker LOD simplification over 40 deterministic polylines
     built from lineitem (x = position, y = hash jitter; ~650 points each
     at sf0.01).  The oracle replays the full split recursion as a
-    recursive CTE with the same multiplicative no-sqrt float math, so the
-    kept-index CSV matches bit-for-bit."""
+    recursive CTE with the same multiplicative no-sqrt float math for the
+    threshold and exact integer cross products for the split point (the
+    kernel decides near-ties exactly), so the kept-index CSV matches
+    bit-for-bit."""
     from osm2geojson_lite_spark.spatial import simplify_lines
 
     li = _read(spark, sf_dir, "lineitem").filter(F.col("l_suppkey") <= 40)
@@ -4343,28 +4345,37 @@ def oracle_sql() -> dict[str, str]:
                        / 500.0 - 1.0 y
               from lineitem where l_suppkey <= 40
             ),
-            pts as (select way_id, list(y order by rn) ys from src group by way_id),
-            seg(way_id, i0, i1, ys) as (
-              select way_id, 1::bigint, len(ys)::bigint, ys
+            pts as (select way_id, list(y order by rn) ys,
+                           list((y * {2.0 ** 53})::hugeint order by rn) yk
+                    from src group by way_id),
+            seg(way_id, i0, i1, ys, yk) as (
+              select way_id, 1::bigint, len(ys)::bigint, ys, yk
               from pts where len(ys) >= 2
               union all
               select way_id,
                      case when sp.side = 0 then t.i0 else t.k end,
                      case when sp.side = 0 then t.k else t.i1 end,
-                     t.ys
+                     t.ys, t.yk
               from (
-                select way_id, i0, i1, ys,
-                       i0 + list_position(cs, list_max(cs)) k,
+                select way_id, i0, i1, ys, yk,
+                       i0 + list_position(es, list_max(es)) k,
                        list_max(cs) m,
                        {repr(0.75 * 0.75)} * (((i1 - i0)::double)*((i1 - i0)::double)
                                  + (ys[i1]-ys[i0])*(ys[i1]-ys[i0])) thresh
                 from (
-                  select way_id, i0, i1, ys,
+                  select way_id, i0, i1, ys, yk,
                          list_transform(generate_series(i0 + 1, i1 - 1),
                            j -> (((i1 - i0)::double)*(ys[j]-ys[i0])
                                  - (ys[i1]-ys[i0])*((j - i0)::double))
                                 * (((i1 - i0)::double)*(ys[j]-ys[i0])
-                                   - (ys[i1]-ys[i0])*((j - i0)::double))) cs
+                                   - (ys[i1]-ys[i0])*((j - i0)::double))) cs,
+                         -- the split point is the first farthest point in
+                         -- exact arithmetic, as the kernel decides near-ties:
+                         -- every y is a multiple of 2**-53, so the scaled
+                         -- cross products are exact integers
+                         list_transform(generate_series(i0 + 1, i1 - 1),
+                           j -> abs((i1 - i0)::hugeint * (yk[j] - yk[i0])
+                                    - (yk[i1] - yk[i0]) * (j - i0)::hugeint)) es
                   from seg where i1 - i0 >= 2
                 )
               ) t, (values (0), (1)) sp(side)

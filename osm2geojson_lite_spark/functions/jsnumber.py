@@ -80,13 +80,24 @@ def json_number(x: float) -> str:
 
 
 def js_str(value) -> str:
-    """``String(value)`` for a JSON-path scalar: the coordinate/ref token, so
-    that token equality matches JS number equality."""
+    """``String(value)`` for a JSON-path scalar: the coordinate/ref/id token,
+    so that token equality matches JS number equality.  JS reads every
+    number as a double, so an integer above 2**53 prints rounded
+    (``1152921504606846977`` -> ``1152921504606847000``) and one beyond the
+    double range as ``Infinity``.  Other values (objects, arrays) fall back
+    to ``str``."""
     if isinstance(value, bool):
         return "true" if value else "false"
     if isinstance(value, int):
-        return str(value)
-    return js_number(float(value))
+        if -(2**53) <= value <= 2**53:
+            return str(value)
+        try:
+            return js_number(float(value))
+        except OverflowError:
+            return "Infinity" if value > 0 else "-Infinity"
+    if isinstance(value, float):
+        return js_number(value)
+    return str(value)
 
 
 def _dump(obj, out: list) -> None:

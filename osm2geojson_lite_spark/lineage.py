@@ -116,7 +116,7 @@ def bucket_col(key, n_buckets: int):
 
     The key is cast to string first so the input side (any ``doc_id`` type)
     and the converted output side (``convert()`` emits ``doc_id`` as string
-    — see ``operators/emit.py``) hash to the SAME bucket; without the cast a
+    — see ``operators/convert.py``) hash to the SAME bucket; without the cast a
     bigint ``doc_id`` would bucket differently before and after conversion.
     """
     return F.pmod(F.xxhash64(key.cast("string")), F.lit(n_buckets)).cast("int")
@@ -143,9 +143,9 @@ def convert_with_lineage(docs: DataFrame, output_path: str, lineage_path: str, *
     old shape ran the FULL parse/resolve/assemble pipeline once per job, a
     measured 2.4x tax over a plain write at 16 buckets / 4 jobs).  Jobs are
     grouped into *scope chunks* of ``jobs_per_scope`` jobs; each chunk runs
-    ``convert()`` ONCE over all its buckets inside one :class:`CacheScope`,
-    materializes the result (memory-and-disk persist), and then every
-    commit in the chunk is a cheap cached filter + partition write.  The
+    ``convert()`` ONCE over all its buckets inside one :class:`CacheScope`
+    (which persists and fills its output), and then every commit in the
+    chunk is a cheap cached filter + partition write.  The
     commit granularity — and therefore the crash-loss window — is unchanged:
     still ``buckets_per_job`` buckets per lineage record.  What a chunk
     holds cached bounds executor storage, so ``jobs_per_scope`` is the
@@ -194,16 +194,11 @@ def convert_with_lineage(docs: DataFrame, output_path: str, lineage_path: str, *
         chunk_buckets = [b for group in chunk for b in group]
         subset = docs.filter(in_bucket.isin(chunk_buckets))
         with CacheScope() as scope:
-            converted = scope.persist(
-                convert(subset, opts, scope=scope).withColumn(
-                    "bucket", bucket_col(F.col("doc_id"), n_buckets)
-                )
+            # convert() fills its cache eagerly, so every commit in the
+            # chunk is a filtered read of it, never a pipeline re-run
+            converted = convert(subset, opts, scope=scope).withColumn(
+                "bucket", bucket_col(F.col("doc_id"), n_buckets)
             )
-            # no explicit materialization job: the first commit's write
-            # scans (and therefore populates) every cache partition — rows
-            # are hash-distributed, not bucket-clustered — so later commits
-            # in the chunk read from cache instead of re-running the
-            # pipeline, and we skip one full pass over the output
             for group in chunk:
                 if fail_after_jobs is not None and ji >= fail_after_jobs:
                     raise RuntimeError(

@@ -128,10 +128,30 @@ def build_way_feature(composite, props_json, tags_json, tag_events_json, coords_
     return feature
 
 
+def way_feature(composite, props_json: str, tag_events, coords_tokens) -> tuple:
+    """``(geom_type, feature_json, geometry_json)`` of one way with at least
+    two ``coords_tokens`` (``[lon, lat]`` token pairs): a LineString, or a
+    CCW Polygon when the polytag fold over ``tag_events`` says polygon and
+    the float ring closes.  Direct string assembly, the same output as
+    ``canonical_json(build_way_feature(...))``."""
+    coords = [[parse_float_js(c[0]), parse_float_js(c[1])] for c in coords_tokens]
+    geom_type = "LineString"
+    if classify_is_polygon(tag_events) and is_ring(coords):
+        geom_type = "Polygon"
+        if ring_direction(coords) != "counterclockwise":
+            coords.reverse()
+    pts = ",".join(f"[{json_number(x)},{json_number(y)}]" for x, y in coords)
+    if geom_type == "Polygon":
+        geom = f'{{"type":"Polygon","coordinates":[[{pts}]]}}'
+    else:
+        geom = f'{{"type":"LineString","coordinates":[{pts}]}}'
+    return geom_type, (f'{{"type":"Feature","id":{_json_str(composite)},'
+                       f'"properties":{props_json},"geometry":{geom}}}'), geom
+
+
 def way_features_kernel(batches) -> Iterator:
-    """LineString/Polygon emission by direct string assembly (same output as
-    ``canonical_json(build_way_feature(...))``, no JSON round-trip for the
-    feature envelope)."""
+    """``mapInPandas`` body emitting one :func:`way_feature` row per way row
+    with two or more resolved coordinates."""
     import pandas as pd
 
     for pdf in batches:
@@ -143,30 +163,15 @@ def way_features_kernel(batches) -> Iterator:
             coords_tokens = json.loads(cj) if isinstance(cj, str) else []
             if len(coords_tokens) <= 1:
                 continue
-            coords = [[parse_float_js(c[0]), parse_float_js(c[1])] for c in coords_tokens]
-            tag_events = json.loads(tev) if isinstance(tev, str) else []
-            geom_type = "LineString"
-            if classify_is_polygon(tag_events) and is_ring(coords):
-                geom_type = "Polygon"
-                if ring_direction(coords) != "counterclockwise":
-                    coords.reverse()
-            pts = ",".join(
-                f"[{json_number(x)},{json_number(y)}]" for x, y in coords
-            )
-            if geom_type == "Polygon":
-                geom = f'{{"type":"Polygon","coordinates":[[{pts}]]}}'
-            else:
-                geom = f'{{"type":"LineString","coordinates":[{pts}]}}'
-            props = merged_props_json(pj, tj)
+            geom_type, feature_json, geom = way_feature(
+                comp, merged_props_json(pj, tj),
+                json.loads(tev) if isinstance(tev, str) else [], coords_tokens)
             out["doc_id"].append(doc_id)
             out["out_pos"].append(out_pos)
             out["sub_seq"].append(0)
             out["feature_id"].append(comp)
             out["geom_type"].append(geom_type)
-            out["feature_json"].append(
-                f'{{"type":"Feature","id":{_json_str(comp)},"properties":{props},'
-                f'"geometry":{geom}}}'
-            )
+            out["feature_json"].append(feature_json)
             out["geometry_json"].append(geom)
         yield pd.DataFrame(out, columns=_FEATURE_COLS)
 

@@ -1,22 +1,29 @@
 """End-to-end conversion pipeline (SURVEY.md §3.4 lifecycle).
 
-``documents(doc_id, spans)`` -> parse -> resolve (joins) -> assemble
-(kernels) -> emit. The logical plan is declared with the DataFrame API
-throughout; Catalyst/AQE pick physical join strategies (broadcast vs
-shuffled-hash) per batch.
+Every document is its own ``RefElements`` universe (SURVEY §1.1): no
+document reads another document's ids.  So ``convert()`` is one
+``mapInPandas`` over the assembled payloads that, per document, parses,
+resolves refs against in-process dicts, assembles Points, ways and
+relations and emits the GeoJSON (:func:`convert_document`).  Its plan
+has no join, no shuffle and no ``groupBy``.
+
+The per-stage operators (``parse``, ``resolve``, ``assemble``, ``emit``)
+still compose the same conversion as a Spark join plan; the benchmark's
+traced pass times that plan layer by layer.
 """
 
 from __future__ import annotations
 
 import logging
 from dataclasses import dataclass
+from functools import partial
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
-from .assemble import FEATURE_SCHEMA, relation_kernel_stream, way_features_kernel
-from .emit import emit_geojson
-from .parse import parse_documents
-from .resolve import relation_closure, resolve_graph, visibility_filter
+from ..functions.jsnumber import canonical_json
+from .assemble import assemble_relation, point_feature_json, way_feature
+from .parse import _analyze
+from .resolve import reachable
 
 
 class CacheScope:
@@ -69,24 +76,25 @@ class Options:
     complete_feature: bool = False
     render_tagged: bool = False
     exclude_way: bool = True
-    salt: int | None = None  # explicit skew salting for the node-ref join
+    # skew salting for the node-ref join of the join plan
+    # (resolve.resolve_graph); convert() resolves refs in process, per
+    # document, and ignores it
+    salt: int | None = None
     # --- mega-document bounds (SURVEY §7 hard part 5) ---------------------
-    # Two per-group unbounded spots exist in the plan: the relation kernel
-    # (groupBy(doc_id, root_inst).applyInPandas loads ONE group fully into
-    # a pandas frame) and the emit collect_list (one doc's features in one
-    # aggregation buffer).  Both are bounded by these caps:
-    #   * max_doc_instances caps parsed elements per document — which also
-    #     caps features per doc, so the emit buffer is bounded by the same
-    #     knob (features <= visible instances + relation roots).
-    #   * max_relation_group_rows caps the relation kernel's INPUT rows per
-    #     (doc, root) group — the exact blow-up unit: super-relation closure
-    #     size x member rows, which can be quadratic in instances.
+    # convert() holds one document's catalog in one Python worker at a
+    # time; two sizes bound that memory:
+    #   * max_doc_instances caps parsed elements per document, which also
+    #     caps its features (at most visible instances + relation roots);
+    #   * max_relation_group_rows caps one relation root's assembly input,
+    #     the resolved members of every relation its closure reaches: the
+    #     exact blow-up unit (super-relation closure size x member rows,
+    #     which can be quadratic in instances).
     # Policy "fail" (default) raises with the offending ids — the 100 TB
     # posture is an explicit refusal, never a task OOM; "skip" drops the
-    # oversized docs/groups from the output (in complete_feature mode a
-    # skipped doc still emits an EMPTY FeatureCollection via the sentinel
-    # path) and reports them via build_features()["skipped_docs"] /
-    # ["skipped_relation_groups"] plus a logging.warning.
+    # oversized docs/groups from the output (an oversized doc emits an
+    # EMPTY FeatureCollection) and reports them via
+    # build_features()["skipped_docs"] / ["skipped_relation_groups"] plus a
+    # logging.warning.
     max_doc_instances: int | None = 2_000_000
     max_relation_group_rows: int | None = 8_000_000
     mega_doc_policy: str = "fail"  # "fail" | "skip"
@@ -116,7 +124,7 @@ class MegaDocumentError(RuntimeError):
     hold driver-side appeared under policy ``"skip"``."""
 
 
-# "skip" collects the oversized ids to the driver (to filter + report);
+# "skip" collects the oversized ids to the driver (to report them);
 # a corpus where MORE than this many items blow the cap is not a few bad
 # documents but a mis-sized cap — refuse instead of building an unbounded
 # driver-side list.
@@ -129,7 +137,7 @@ def _mega_guard(over: DataFrame, noun: str, cap_name: str, cap: int,
 
     ``over`` holds only the key columns of the items above ``cap``.  Returns
     their sorted keys (a bare value for one key column, else a tuple) for
-    the caller to drop under policy "skip"; raises ``MegaDocumentError``
+    the caller to report under policy "skip"; raises ``MegaDocumentError``
     under "fail", or under "skip" when more than ``_SKIP_LIST_BOUND`` items
     are over the cap.
     """
@@ -154,183 +162,245 @@ def _mega_guard(over: DataFrame, noun: str, cap_name: str, cap: int,
     return keys
 
 
+# ---------------------------------------------------------------------------
+# the per-document kernel
+# ---------------------------------------------------------------------------
+
+EMPTY_COLLECTION = '{"type":"FeatureCollection","features":[]}'
+
+OUTPUT_SCHEMA = (
+    "doc_id string, geojson string, n_instances long, over_roots array<bigint>"
+)
+_OUTPUT_COLS = ["doc_id", "geojson", "n_instances", "over_roots"]
+
+# The kernel yields an output frame once its GeoJSON passes this many
+# characters (at most 4 UTF-8 bytes each), not one frame per input batch: a
+# batch of up to maxRecordsPerBatch documents could otherwise approach
+# Arrow's 2 GB string-offset limit.
+FLUSH_CHARS = 64 << 20
+
+
+def _props_json(rec: dict) -> str:
+    """Canonical ``getProps()`` of a parsed record: tags overwrite props."""
+    return canonical_json({**rec["props"], **rec["tags"]} if rec["tags"] else rec["props"])
+
+
+def _relation_catalog(instances: list, registry: dict, way_coords) -> tuple[dict, dict]:
+    """J2-J4: the ``rels`` catalog :func:`assemble.assemble_relation` reads,
+    with an entry for every relation instance (live or not) that has a
+    resolved member, and each entry's resolved-member count.  A ref member
+    resolves to the live instance of its composite id, an inline member to
+    the instance it created; an unresolved member drops out."""
+    rels: dict[int, dict] = {}
+    rows: dict[int, int] = {}
+    for rec in instances:
+        if rec["etype"] != "relation":
+            continue
+        ways, subs, nodes = [], [], []
+        for m in rec["members"]:
+            if m["kind"] == "inline":
+                target = instances[m["inst"]]
+            else:
+                target = (registry.get(f'{m["mtype"]}/{m["ref"]}')
+                          if m["ref"] is not None else None)
+                if target is None:
+                    continue
+            if m["mtype"] == "way":
+                ways.append(way_coords(target))
+            elif m["mtype"] == "relation":
+                subs.append(target["inst"])
+            else:
+                nodes.append((target["composite"], canonical_json(target["props"]),
+                              canonical_json(target["tags"]), target["lon"], target["lat"]))
+        n = len(ways) + len(subs) + len(nodes)
+        if n:
+            rels[rec["inst"]] = {
+                "composite": rec["composite"],
+                "props_json": canonical_json(rec["props"]),
+                "tags_json": canonical_json(rec["tags"]),
+                "roles": [m["role"] for m in rec["members"] if m["mtype"] == "way"],
+                "bounds": rec["bounds"],
+                "ways": ways,
+                "subs": subs,
+                "nodes": nodes,
+            }
+            rows[rec["inst"]] = n
+    return rels, rows
+
+
+def convert_document(doc_id, payload, opts: Options) -> tuple[str, int, list]:
+    """One document -> ``(geojson, instances, over_roots)``.
+
+    Parse, then resolve every deferred reference against the document's
+    own catalog (``state.registry``: the live instance per composite id;
+    ``state.first_seq``: its output position), then assemble and emit, the
+    same bytes as the join plan:
+
+    - J6: an instance's ref count is the probes naming it from every
+      instance's way slots and members, live or not, plus one if a member
+      created it; P3 visibility reads it;
+    - J1: a way's coordinates are its slots in order, a ``ref=None`` slot
+      inline, a ref slot the live node's, a dangling ref dropped;
+    - features sort by ``(out_pos, sub_seq, feature_json)``; default mode
+      emits the relation geometry with the least
+      ``(out_pos, sub_seq, geometry_json)`` when there is one.
+
+    ``instances`` is the parsed element count; a document over
+    ``opts.max_doc_instances`` emits an empty FeatureCollection.
+    ``over_roots`` lists the relation roots whose group (the resolved
+    members of every relation their closure reaches) is over
+    ``opts.max_relation_group_rows``; their features are dropped.
+    """
+    if payload is None:
+        return EMPTY_COLLECTION, 0, []
+    state = _analyze(doc_id, payload)
+    instances, registry, first_seq = state.instances, state.registry, state.first_seq
+    n = len(instances)
+    if opts.max_doc_instances is not None and n > opts.max_doc_instances:
+        return EMPTY_COLLECTION, n, []
+
+    hits: dict[str, int] = {}
+    for rec in instances:
+        for slot in rec["way_slots"]:
+            if slot["ref"] is not None:
+                key = "node/" + slot["ref"]
+                hits[key] = hits.get(key, 0) + 1
+        for m in rec["members"]:
+            if m["kind"] == "ref" and m["ref"] is not None:
+                key = f'{m["mtype"]}/{m["ref"]}'
+                hits[key] = hits.get(key, 0) + 1
+
+    coords_of: dict[int, list] = {}
+
+    def way_coords(way: dict) -> list:
+        coords = coords_of.get(way["inst"])
+        if coords is None:
+            coords = []
+            for slot in way["way_slots"]:
+                if slot["ref"] is None:
+                    coords.append([slot["lon"], slot["lat"]])
+                elif (node := registry.get("node/" + slot["ref"])) is not None:
+                    coords.append([node["lon"], node["lat"]])
+            coords_of[way["inst"]] = coords
+        return coords
+
+    feats: list[tuple] = []  # (out_pos, sub_seq, feature_json, relation geometry_json)
+    roots: list[dict] = []
+    for comp, rec in registry.items():
+        etype = rec["etype"]
+        if hits.get(comp, 0) + rec["member_created"] > 0 and not (
+                rec["has_tag"] and opts.render_tagged
+                and not (etype == "way" and opts.exclude_way)):
+            continue
+        if etype == "node":
+            if rec["latlng_set"]:
+                feats.append((first_seq[comp], 0, point_feature_json(
+                    comp, _props_json(rec), rec["lon"], rec["lat"]), None))
+        elif etype == "way":
+            coords = way_coords(rec)
+            if len(coords) > 1:
+                feats.append((first_seq[comp], 0, way_feature(
+                    comp, _props_json(rec), rec["tag_events"], coords)[1], None))
+        else:
+            roots.append(rec)
+
+    over: list[int] = []
+    if roots:
+        rels, rows = _relation_catalog(instances, registry, way_coords)
+        cap = opts.max_relation_group_rows
+        # no group can exceed the document's resolved-member total
+        if cap is not None and sum(rows.values()) > cap:
+            adj = {ri: e["subs"] for ri, e in rels.items()}
+            over = [rec["inst"] for rec in roots
+                    if sum(rows.get(ri, 0) for ri in reachable(rec["inst"], adj)) > cap]
+        for rec in roots:
+            if rec["inst"] in over:
+                continue
+            out_pos = first_seq[rec["composite"]]
+            for sub_seq, feature in enumerate(assemble_relation(rels, rec["inst"])):
+                feats.append((out_pos, sub_seq, canonical_json(feature),
+                              canonical_json(feature["geometry"])))
+
+    if not opts.complete_feature:
+        first = min(((f[0], f[1], f[3]) for f in feats if f[3] is not None), default=None)
+        if first is not None:
+            return first[2], n, over
+    feats.sort(key=lambda f: f[:3])
+    return ('{"type":"FeatureCollection","features":['
+            + ",".join(f[2] for f in feats) + "]}"), n, over
+
+
+def _convert_stream(batches, opts: Options, flush_chars: int):
+    """``mapInPandas`` body: :func:`convert_document` for every
+    ``(doc_id, payload)`` row, one output row per input row.  Frames are
+    yielded once their GeoJSON passes ``flush_chars`` characters."""
+    import pandas as pd
+
+    cols: dict[str, list] = {c: [] for c in _OUTPUT_COLS}
+    size = 0
+    for pdf in batches:
+        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+            geojson, n, over = convert_document(doc_id, payload, opts)
+            cols["doc_id"].append(doc_id)
+            cols["geojson"].append(geojson)
+            cols["n_instances"].append(n)
+            cols["over_roots"].append(over)
+            size += len(geojson)
+            if size >= flush_chars:
+                yield pd.DataFrame(cols, columns=_OUTPUT_COLS)
+                cols = {c: [] for c in _OUTPUT_COLS}
+                size = 0
+    if cols["doc_id"]:
+        yield pd.DataFrame(cols, columns=_OUTPUT_COLS)
+
+
 def build_features(
     docs: DataFrame, opts: Options = Options(), scope: CacheScope | None = None
 ) -> dict:
-    """Run parse+resolve+assemble; returns dict with feature DataFrames."""
-    payloads = assemble_payload(docs)
-    # Persist AND eagerly materialize the parse output.  AQE runs the many
-    # independent downstream query stages concurrently; against a lazily
-    # populated cache they all race on the cold cache and each re-executes
-    # the Python parse kernel (measured: ~10x parse core-time).  One count()
-    # populates the cache once; every branch then scans columnar blocks.
+    """Convert ``docs`` and apply the mega-document caps.
+
+    One ``mapInPandas`` over :func:`assemble_payload` runs
+    :func:`convert_document` per row.  Its output is persisted in ``scope``
+    and filled by one eager job, a no-op write that ``DataFrame.observe``
+    rides to count the documents over ``max_doc_instances`` and the
+    ``(doc, root)`` groups over ``max_relation_group_rows``.  Only a
+    non-zero count runs a guard job (:func:`_mega_guard`) to collect the
+    ids and apply ``mega_doc_policy``.
+
+    Returns ``{"geojson": (doc_id, geojson) frame, "skipped_docs": [...],
+    "skipped_relation_groups": [(doc_id, root_inst), ...]}``.
+    """
     if scope is None:
         # scopeless call: recycle the module-default scope (drop the
         # previous scopeless conversion's caches — see CacheScope docstring).
         _DEFAULT_SCOPE.release()
         scope = _DEFAULT_SCOPE
-    instances = scope.persist(parse_documents(payloads))
+    out = scope.persist(assemble_payload(docs).mapInPandas(
+        partial(_convert_stream, opts=opts, flush_chars=FLUSH_CHARS),
+        schema=OUTPUT_SCHEMA))
 
-    # --- mega-document bound #1: parsed instances per document ------------
-    # The guard aggregation scans every partition of the freshly persisted
-    # parse output, so it IS the cache-materialization job — one single-
-    # stage scan (no concurrent-stage race), and one fewer job barrier per
-    # conversion than a separate count() + guard pair.
+    doc_cap, group_cap = opts.max_doc_instances, opts.max_relation_group_rows
+    over_doc = (F.col("n_instances") > doc_cap) if doc_cap is not None else F.lit(False)
+    counts = Observation()
+    (out.observe(counts, F.sum(over_doc.cast("long")).alias("docs"),
+                 F.sum(F.size("over_roots")).alias("groups"))
+     .write.format("noop").mode("overwrite").save())
+
     skipped_docs: list[str] = []
-    if opts.max_doc_instances is None:
-        instances.count()
-    else:
+    if counts.get["docs"]:
         skipped_docs = _mega_guard(
-            instances.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > opts.max_doc_instances).select("doc_id"),
-            "document", "max_doc_instances", opts.max_doc_instances,
+            out.filter(over_doc).select("doc_id"),
+            "document", "max_doc_instances", doc_cap, opts.mega_doc_policy,
+        )
+    skipped_groups: list[tuple[str, int]] = []
+    if counts.get["groups"]:
+        skipped_groups = _mega_guard(
+            out.select("doc_id", F.explode("over_roots")),
+            "relation group", "max_relation_group_rows", group_cap,
             opts.mega_doc_policy,
         )
-        if skipped_docs:
-            instances = instances.filter(~F.col("doc_id").isin(skipped_docs))
-
-    graph = resolve_graph(instances, salt=opts.salt)
-    # Persist every subtree with >1 consumer so its shuffle executes exactly
-    # once: `live` (probe-count agg + join; read by all three feature
-    # branches), `way_coords` (the J1 explode+join+collect — the heaviest
-    # shuffle; read by way features AND the relation kernel) and `members`
-    # (member-resolution join; read by the relation kernel AND the closure
-    # edges).  Eager materialization populates each cache before the
-    # concurrent downstream stages race on it (a lazily populated persist
-    # makes every first-wave stage re-run the Python parse, measured ~10x
-    # parse core-time).  The three subtrees are mutually independent, so ONE
-    # union-count job materializes all three caches: the scheduler
-    # interleaves their stages freely inside a single job instead of three
-    # barriers.
-    live = scope.persist(graph["live"])
-    way_coords = scope.persist(graph["way_coords"])
-    members = scope.persist(graph["members"])
-    one = F.lit(1).alias("one")
-    (
-        live.select(one)
-        .unionAll(way_coords.select(one))
-        .unionAll(members.select(one))
-        .count()
-    )
-    visible = visibility_filter(
-        live, render_tagged=opts.render_tagged, exclude_way=opts.exclude_way
-    )
-
-    # --- node features -----------------------------------------------------
-    # The parse kernel already built each node's Point feature (point_json),
-    # so this branch is a projection: no Python stage.  geometry_json stays
-    # NULL because emit reads it only for relation rows.
-    node_feats = (
-        visible.filter((F.col("etype") == "node") & F.col("latlng_set"))
-        .select(
-            "doc_id", "out_pos", F.lit(0).alias("sub_seq"),
-            F.col("composite").alias("feature_id"),
-            F.lit("Point").alias("geom_type"),
-            F.col("point_json").alias("feature_json"),
-            F.lit(None).cast("string").alias("geometry_json"),
-        )
-    )
-
-    # --- way features ------------------------------------------------------
-    way_feats = (
-        visible.filter(F.col("etype") == "way")
-        .select("doc_id", F.col("inst").alias("owner"), "out_pos", "composite",
-                "props_json", "tags_json", "tag_events_json")
-        .join(way_coords, ["doc_id", "owner"], "left")
-        .mapInPandas(way_features_kernel, schema=FEATURE_SCHEMA)
-    )
-
-    # --- relation features -------------------------------------------------
-    rel_meta = instances.filter(F.col("etype") == "relation").select(
-        "doc_id",
-        F.col("inst").alias("rel_inst"),
-        "composite", "props_json", "tags_json", "roles_json", "bounds_json",
-    )
-    nodes_by_inst = instances.filter(F.col("etype") == "node").select(
-        "doc_id",
-        F.col("inst").alias("target_inst"),
-        F.col("composite").alias("node_comp"),
-        F.col("props_json").alias("node_props_json"),
-        F.col("tags_json").alias("node_tags_json"),
-        F.col("lon").alias("node_lon"),
-        F.col("lat").alias("node_lat"),
-    )
-
-    roots = visible.filter(F.col("etype") == "relation").select(
-        "doc_id", F.col("inst").alias("root_inst"), "out_pos"
-    )
-    closure = relation_closure(roots, graph["edges"])
-
-    # --- mega-document bound #2: relation kernel group size ---------------
-    # The kernel's per-(doc, root) input is closure-size x member-rows —
-    # quadratic in instances for adversarial super-relation fan-out, so cap
-    # #1 alone does not bound it.  The EXACT group size is computable from
-    # per-relation member counts (one row per relation, map-side combined)
-    # joined to the closure — relation metadata, tiny even for mega docs.
-    # Closure gets persisted because the guard adds a second consumer.
-    skipped_groups: list[tuple[str, int]] = []
-    if opts.max_relation_group_rows is not None:
-        closure = scope.persist(closure)
-        mcounts = members.groupBy("doc_id", "rel_inst").agg(
-            F.count(F.lit(1)).alias("mn")
-        )
-        skipped_groups = _mega_guard(
-            closure.join(mcounts, ["doc_id", "rel_inst"], "left")
-            .groupBy("doc_id", "root_inst")
-            .agg(F.sum(F.coalesce(F.col("mn"), F.lit(0))).alias("g_rows"))
-            .filter(F.col("g_rows") > opts.max_relation_group_rows)
-            .select("doc_id", "root_inst"),
-            "relation group", "max_relation_group_rows",
-            opts.max_relation_group_rows, opts.mega_doc_policy,
-        )
-        if skipped_groups:
-            drop = F.lit(False)
-            for d, r in skipped_groups:
-                drop = drop | (
-                    (F.col("doc_id") == d) & (F.col("root_inst") == r)
-                )
-            closure = closure.filter(~drop)
-
-    kernel_in = (
-        closure.join(members, ["doc_id", "rel_inst"])
-        .withColumnRenamed("p", "m_p")
-        .withColumnRenamed("mtype", "m_mtype")
-        .join(
-            way_coords.withColumnRenamed("owner", "target_inst"),
-            ["doc_id", "target_inst"],
-            "left",
-        )
-        .join(nodes_by_inst, ["doc_id", "target_inst"], "left")
-        .withColumn("child_inst", F.col("target_inst"))
-        .join(rel_meta, ["doc_id", "rel_inst"])
-        .join(roots.select("doc_id", "root_inst", "out_pos"), ["doc_id", "root_inst"])
-    )
-    # Project to exactly the columns the kernel reads BEFORE the group
-    # repartition: mapInPandas is opaque to Catalyst's column pruning, so
-    # without the select the exchange would also carry the member `role`
-    # string and `target_inst` (already duplicated as child_inst).
-    kernel_in = kernel_in.select(
-        "doc_id", "root_inst", "rel_inst", "m_p", "m_mtype", "out_pos",
-        "coords_json", "child_inst", "node_comp", "node_props_json",
-        "node_tags_json", "node_lon", "node_lat", "composite", "props_json",
-        "tags_json", "roles_json", "bounds_json",
-    )
-    # One shuffle keyed exactly like the former groupBy(...).applyInPandas,
-    # but the kernel runs as a mapInPandas STREAM over the sorted partition:
-    # one Python call per Arrow batch (thousands of groups) instead of one
-    # call + one pandas frame per (doc, root) group — measured 13.5s -> ~2s
-    # on the 32k-doc bench corpus.  Partition count follows
-    # spark.sql.shuffle.partitions, same as the groupBy it replaces.
-    rel_feats = (
-        kernel_in.repartition("doc_id", "root_inst")
-        .sortWithinPartitions("doc_id", "root_inst")
-        .mapInPandas(relation_kernel_stream, schema=FEATURE_SCHEMA)
-    )
-
     return {
-        "node_features": node_feats,
-        "way_features": way_feats,
-        "relation_features": rel_feats,
+        "geojson": out.select("doc_id", "geojson"),
         "skipped_docs": skipped_docs,
         "skipped_relation_groups": skipped_groups,
     }
@@ -344,19 +414,16 @@ def convert(
     With ``complete_feature=True`` every doc yields a FeatureCollection;
     otherwise docs whose first qualifying relation produced features yield
     that bare geometry (reference default mode, ``index.ts:220-222``).
-    Both modes share one fused emit aggregation (see ``emit_geojson``).
 
-    **Output ``doc_id`` is always a string**, whatever the input column's
-    type: span assembly casts it once up front (every internal key — and
-    the lineage bucket — hashes the string form), and the emit sentinel
-    union would coerce it anyway.  Callers joining the output back to a
-    non-string source should cast their side.
+    ``doc_id`` is the documents table's key: every input row converts on
+    its own, so there is one output row per input row.  (The former join
+    plan grouped by ``doc_id`` and so merged rows sharing an id into one
+    mixed FeatureCollection.)  **Output ``doc_id`` is always a string**,
+    whatever the input column's type: span assembly casts it once up front,
+    and the lineage bucket hashes the string form.  Callers joining the
+    output back to a non-string source should cast their side.
+
+    The conversion itself runs eagerly (:func:`build_features`); the
+    returned frame reads its persisted output.
     """
-    parts = build_features(docs, opts, scope=scope)
-    return emit_geojson(
-        docs,
-        parts["node_features"],
-        parts["way_features"],
-        parts["relation_features"],
-        complete_feature=opts.complete_feature,
-    )
+    return build_features(docs, opts, scope=scope)["geojson"]

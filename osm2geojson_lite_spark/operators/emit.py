@@ -1,5 +1,8 @@
 """Emit stage: feature rows -> per-document GeoJSON (SURVEY.md §2.1 S7, §2.5 O1-O4).
 
+This is the join plan's emit; ``convert()`` itself emits each document in
+its per-document stream (``operators/convert.py``), with the same bytes.
+
 FeatureCollection assembly is pure JVM-side column work: sorted struct
 collection replays the reference's Map-insertion output order
 (``index.ts:214``) and string concatenation builds the canonical JSON — no

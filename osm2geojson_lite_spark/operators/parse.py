@@ -59,9 +59,17 @@ def token(v):
     return js_str(v)
 
 
+def id_text(eid) -> str:
+    """``String(id)`` as the reference's template literal formats an element
+    id: ``undefined`` for a missing id, JS number text for a JSON number
+    (``1.0`` -> ``1``, ``true`` -> ``true``)."""
+    if eid is None:
+        return "undefined"
+    return eid if isinstance(eid, str) else js_str(eid)
+
+
 def composite_id(etype: str, eid) -> str:
-    # JS template literal: undefined -> 'undefined'
-    return f"{etype}/{eid if eid is not None else 'undefined'}"
+    return f"{etype}/{id_text(eid)}"
 
 
 # ---------------------------------------------------------------------------
@@ -136,12 +144,13 @@ class _DocState:
         self.seq = 0
 
     def new_instance(self, etype: str, eid, member_created: bool = False) -> dict:
-        comp = composite_id(etype, eid)
+        text = id_text(eid)
+        comp = f"{etype}/{text}"
         rec = {
             "doc_id": self.doc_id,
             "inst": self.seq,
             "etype": etype,
-            "eid": str(eid) if eid is not None else "undefined",
+            "eid": text,
             "composite": comp,
             "member_created": member_created,
             "has_tag": False,
@@ -396,12 +405,8 @@ def detect_format(payload: str) -> str:
     return "invalid"
 
 
-def _parse_into(doc_id, payload: str, out: dict) -> None:
-    """Parse one document, appending instance fields COLUMN-WISE into
-    ``out`` (a dict of lists keyed by ``_INSTANCE_COLS``).  The columnar
-    form feeds ``pd.DataFrame`` directly — the former one-dict-per-row
-    materialization plus pandas' from-records path cost more than the
-    parse itself on million-instance corpora."""
+def _analyze(doc_id, payload: str) -> _DocState:
+    """One document's catalog: every instance it registers, in order."""
     state = _DocState(doc_id)
     fmt = detect_format(payload)
     if fmt == "json-raw":
@@ -413,7 +418,16 @@ def _parse_into(doc_id, payload: str, out: dict) -> None:
             analyze_json(state, osm)
     elif fmt == "xml":
         analyze_xml(state, payload)
+    return state
 
+
+def _parse_into(doc_id, payload: str, out: dict) -> None:
+    """Parse one document, appending instance fields COLUMN-WISE into
+    ``out`` (a dict of lists keyed by ``_INSTANCE_COLS``).  The columnar
+    form feeds ``pd.DataFrame`` directly — the former one-dict-per-row
+    materialization plus pandas' from-records path cost more than the
+    parse itself on million-instance corpora."""
+    state = _analyze(doc_id, payload)
     registry = state.registry
     first_seq = state.first_seq
     for rec in state.instances:

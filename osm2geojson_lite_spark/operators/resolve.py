@@ -192,13 +192,27 @@ def visibility_filter(live_rc: DataFrame, *, render_tagged: bool, exclude_way: b
 CLOSURE_SCHEMA = "doc_id string, root_inst long, rel_inst long"
 
 
+def reachable(root, adj: dict):
+    """Every relation reachable from ``root`` over ``adj`` (relation ->
+    child relations), root included, each once.  Visited-set walk,
+    cycle-safe (the reference would blow its stack on cycles,
+    ``relation.ts:172-174``)."""
+    seen = {root}
+    stack = [root]
+    while stack:
+        cur = stack.pop()
+        yield cur
+        for nxt in adj.get(cur, ()):
+            if nxt not in seen:
+                seen.add(nxt)
+                stack.append(nxt)
+
+
 def _closure_stream(batches):
     """``mapInPandas`` body over (doc_id, src, dst, is_root) rows sorted by
     ``doc_id`` (an edge src -> dst, or a root with src = dst): holds one document's roots and adjacency at a time (a
     document that straddles an Arrow batch carries into the next one) and
-    emits, per root, every relation reachable from it, root included.
-    Visited-set BFS, cycle-safe (the reference would blow its stack on
-    cycles, ``relation.ts:172-174``)."""
+    emits, per root, every relation reachable from it (:func:`reachable`)."""
     import pandas as pd
 
     out_doc: list = []
@@ -207,17 +221,10 @@ def _closure_stream(batches):
 
     def flush(doc_id, roots, adj):
         for root in roots:
-            seen = {root}
-            stack = [root]
-            while stack:
-                cur = stack.pop()
+            for cur in reachable(root, adj):
                 out_doc.append(doc_id)
                 out_root.append(root)
                 out_rel.append(cur)
-                for nxt in adj.get(cur, ()):
-                    if nxt not in seen:
-                        seen.add(nxt)
-                        stack.append(nxt)
 
     def take():
         pdf = pd.DataFrame({"doc_id": out_doc, "root_inst": out_root,

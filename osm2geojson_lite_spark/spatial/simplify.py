@@ -24,6 +24,12 @@ FIRST index attaining the max deviation (numpy ``argmax`` == SQL
 zero-length chord degenerates to radial distance from the start point.
 Output is the sorted array of kept 0-based indices — integers, no float
 leaves the operator.
+
+The float comparisons decide a chord only where their rounding cannot
+change the answer.  When the farthest point lies within a few ulps of the
+threshold, or of another point's deviation, that chord is decided again in
+exact rational arithmetic over the same float inputs (a point at exactly
+``eps`` from its chord is dropped).
 """
 
 from __future__ import annotations
@@ -34,6 +40,30 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 SIMPLIFY_SCHEMA = "way_id bigint, n_in int, kept array<int>"
+
+# A float decision is trusted only when its margin exceeds these bounds:
+# 32 ulps relative (several times the few roundings each term takes), and
+# no threshold below 2**-900, where a product may have lost digits to
+# underflow.
+_REL = 2.0 ** -48
+_TINY = 2.0 ** -900
+
+
+def _exact_split(xs, ys, i0: int, i1: int, eps: float):
+    """Exact twin of one chord step: the first interior index farthest from
+    chord ``(i0, i1)`` if it lies more than ``eps`` away, else None."""
+    from fractions import Fraction
+
+    x0, y0 = Fraction(xs[i0]), Fraction(ys[i0])
+    dx, dy = Fraction(xs[i1]) - x0, Fraction(ys[i1]) - y0
+    len2 = dx * dx + dy * dy
+    best, k = Fraction(-1), None
+    for j in range(i0 + 1, i1):
+        ax, ay = Fraction(xs[j]) - x0, Fraction(ys[j]) - y0
+        c = ax * ax + ay * ay if len2 == 0 else (dx * ay - dy * ax) ** 2
+        if c > best:
+            best, k = c, j
+    return k if best > Fraction(eps) ** 2 * (len2 or 1) else None
 
 
 def dp_keep_indices(xs: np.ndarray, ys: np.ndarray, eps: float) -> np.ndarray:
@@ -55,19 +85,30 @@ def dp_keep_indices(xs: np.ndarray, ys: np.ndarray, eps: float) -> np.ndarray:
             continue
         x0, y0 = xs[i0], ys[i0]
         dx, dy = xs[i1] - x0, ys[i1] - y0
-        len2 = dx * dx + dy * dy
-        jx = xs[i0 + 1:i1]
-        jy = ys[i0 + 1:i1]
-        if len2 == 0.0:
-            c = (jx - x0) * (jx - x0) + (jy - y0) * (jy - y0)
+        ax = xs[i0 + 1:i1] - x0
+        ay = ys[i0 + 1:i1] - y0
+        if dx == 0.0 and dy == 0.0:
+            c = ax * ax + ay * ay
+            slack = _REL * c
             thresh = eps2
         else:
-            cr = dx * (jy - y0) - dy * (jx - x0)
+            cr = dx * ay - dy * ax
             c = cr * cr
-            thresh = eps2 * len2
-        m = c.max()
-        if m > thresh:
-            k = i0 + 1 + int(np.argmax(c))  # first max -> lowest index
+            # cr's rounding error is below _REL * (|dx*ay| + |dy*ax|)
+            err = _REL * (np.abs(dx * ay) + np.abs(dy * ax))
+            slack = err * (2 * np.abs(cr) + err) + _REL * c
+            thresh = eps2 * (dx * dx + dy * dy)
+        i = int(np.argmax(c))  # first max -> lowest index
+        if not (np.isfinite(c[i]) and np.isfinite(thresh)):
+            k = i0 + 1 + i if c[i] > thresh else None
+        elif thresh >= _TINY and (c + slack).max() < thresh * (1 - _REL):
+            k = None
+        elif (thresh >= _TINY and c[i] - slack[i] > thresh * (1 + _REL)
+              and np.count_nonzero(c + slack >= c[i] - slack[i]) == 1):
+            k = i0 + 1 + i
+        else:  # a near-tie: rounding could decide it
+            k = _exact_split(xs, ys, i0, i1, eps)
+        if k is not None:
             keep[k] = True
             stack.append((k, i1))
             stack.append((i0, k))

@@ -34,7 +34,9 @@ from osm2geojson_lite_spark.functions.jsnumber import (
     js_str,
     parse_float_js,
 )
+from osm2geojson_lite_spark.operators.convert import Options, convert_document
 from osm2geojson_lite_spark.operators.events import _doc_events
+from osm2geojson_lite_spark.operators.parse import composite_id
 from osm2geojson_lite_spark.operators.stitch import WayCollection
 from osm2geojson_lite_spark.spatial.cells import (
     _RES_SHIFT,
@@ -198,6 +200,46 @@ def test_js_number_fixed_cases(x, want):
     assert js_number(x) == want
     assert js_str(x) == want
     assert canonical_json([x]) == f"[{want}]"
+
+
+@needs_node
+@given(st.lists(st.one_of(st.integers(-(2**70), 2**70), st.booleans(),
+                          st.floats(allow_nan=False, allow_infinity=False)),
+                min_size=1, max_size=100))
+@settings(max_examples=40, deadline=None)
+def test_js_str_and_composite_id_match_node(values):
+    """Element ids and ref tokens format as JS ``String()`` and the
+    reference's `${type}/${id}` template: 1.0 -> 1, true -> true, an
+    integer above 2**53 rounded through the double it parses to."""
+    assert [js_str(v) for v in values] == _node_map("String", values)
+    assert ([composite_id("node", v) for v in values]
+            == _node_map("v => `node/${v}`", values))
+
+
+@pytest.mark.parametrize("v, want", [
+    (1.0, "1"), (True, "true"), (2**53 + 1, "9007199254740992"),
+    (1152921504606846977, "1152921504606847000"), (-(10**400), "-Infinity"),
+])
+def test_js_str_fixed_ids(v, want):
+    assert js_str(v) == want
+    assert composite_id("way", v) == f"way/{want}"
+
+
+@needs_node
+def test_way_ref_resolves_float_node_id():
+    """A way listing node 1 finds the node registered with id 1.0: both
+    read as the JS number 1 (node computes the composite ids)."""
+    elements = [
+        {"type": "node", "id": 1.0, "lat": 1, "lon": 2},
+        {"type": "node", "id": 2, "lat": 3, "lon": 4},
+        {"type": "way", "id": 3, "nodes": [1, 2], "tags": {"highway": "path"}},
+    ]
+    payload = json.dumps({"elements": elements})
+    assert [r["composite"] for r in parse_document("d", payload)] == _node_map(
+        "e => `${e.type}/${e.id}`", json.loads(payload)["elements"])
+    geojson, _, _ = convert_document("d", payload, Options(complete_feature=True))
+    assert [(f["id"], f["geometry"]["coordinates"]) for f in json.loads(geojson)["features"]
+            ] == [("way/3", [[2, 1], [4, 3]])]
 
 
 def test_non_finite_numbers_are_json_null():

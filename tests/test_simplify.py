@@ -3,36 +3,41 @@
 from __future__ import annotations
 
 import math
+from fractions import Fraction
 
 import numpy as np
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from osm2geojson_lite_spark.spatial import dp_keep_indices, simplify_lines
 
 
 def _dp_recursive(pts: list[tuple[float, float]], eps: float) -> list[int]:
-    """Textbook recursive DP, written independently of the kernel
-    (sqrt/division distance form) — the semantic oracle."""
+    """Textbook recursive DP, written independently of the kernel — the
+    semantic oracle.  Exact: rational arithmetic over the same float
+    inputs, squared distances compared with ``eps**2``, so a point at
+    exactly ``eps`` from its chord is dropped whatever the rounding."""
     n = len(pts)
     if n <= 2:
         return list(range(n))
+    q = [(Fraction(x), Fraction(y)) for x, y in pts]
+    eps2 = Fraction(eps) ** 2
 
     def seg(i0: int, i1: int) -> list[int]:
         if i1 - i0 < 2:
             return []
-        (x0, y0), (x1, y1) = pts[i0], pts[i1]
+        (x0, y0), (x1, y1) = q[i0], q[i1]
         dx, dy = x1 - x0, y1 - y0
-        ln = math.hypot(dx, dy)
-        best, bi = -1.0, -1
+        len2 = dx * dx + dy * dy
+        best, bi = Fraction(-1), -1
         for j in range(i0 + 1, i1):
-            xj, yj = pts[j]
-            if ln == 0.0:
-                d = math.hypot(xj - x0, yj - y0)
+            xj, yj = q[j]
+            if len2 == 0:
+                d2 = (xj - x0) ** 2 + (yj - y0) ** 2
             else:
-                d = abs(dx * (yj - y0) - dy * (xj - x0)) / ln
-            if d > best:
-                best, bi = d, j
-        if best > eps:
+                d2 = (dx * (yj - y0) - dy * (xj - x0)) ** 2 / len2
+            if d2 > best:
+                best, bi = d2, j
+        if best > eps2:
             return seg(i0, bi) + [bi] + seg(bi, i1)
         return []
 
@@ -80,6 +85,11 @@ def test_short_and_degenerate():
     ),
     st.floats(0.01, 10.0),
 )
+# a point at exactly eps; two deviations that round alike; a chord whose
+# squared length underflows
+@example([(0, 0), (0, 0.99999), (99.5, 0)], 0.99999)
+@example([(2.0, 2.0 ** -52), (0.5, 1.0), (0.0, 1.0), (0.0, 0.0)], 0.5)
+@example([(0.0, 2.225073858507e-311), (1.0, 1.0), (0.0, 0.0)], 1.0)
 def test_matches_recursive_oracle(pts, eps):
     assert _kernel_keep(pts, eps) == _dp_recursive(pts, eps)
 

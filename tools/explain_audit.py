@@ -9,11 +9,13 @@ changes: python tools/explain_audit.py
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -242,11 +244,13 @@ def plan_of(df) -> str:
 def convert_runtime_audit(spark) -> str:
     """Executed-stage audit of one full conversion.
 
-    Static exchange counts over `explain("formatted")` text overcount once
-    subtrees are persisted — the formatted output re-prints a cached
-    relation's entire build plan at every InMemoryTableScan that references
-    it.  What the cluster actually pays is *executed* stages, so count those
-    via the status tracker.
+    ``convert()`` is one per-document ``mapInPandas`` whose persisted
+    output one eager job fills (the mega-document counts ride it through
+    ``DataFrame.observe``); the caller's action then reads that cache.  So
+    a conversion should run two jobs of one stage each: a shuffle would add
+    a map stage to its job.  Counted from the status tracker, since
+    ``explain("formatted")`` re-prints a cached relation's build plan at
+    every scan of it.
     """
     from osm2geojson_lite_spark import Options, convert
     from osm2geojson_lite_spark.sources.synth import generate_documents
@@ -272,14 +276,14 @@ def convert_runtime_audit(spark) -> str:
         if si and (si.numCompletedTasks or si.numActiveTasks or si.numFailedTasks):
             executed += 1
             tasks += si.numCompletedTasks
+    shape = "OK" if len(stage_ids) == len(jids) else "PROBLEM: a job has a shuffle stage"
     return (
         "## convert — runtime stage audit (400 docs, noop sink)\n\n"
         f"- {len(jids)} jobs, {executed} executed stages (of {len(stage_ids)}"
-        " scheduled; the rest skipped = reused exchange/cache outputs),"
-        f" {tasks} tasks\n"
-        "\nExecuted stages are the scale tax a real cluster pays per"
-        " conversion; the static exchange counts below double-count cached"
-        " subtree build plans re-printed at each InMemoryTableScan.\n"
+        f" scheduled), {tasks} tasks\n"
+        f"- {shape}: one per-document stream, one eager job filling its"
+        " cache, then the sink reads the cache; no join, no exchange, no"
+        " groupBy\n"
     )
 
 
@@ -332,7 +336,7 @@ def main() -> None:
         print(f"{name}: {'; '.join(findings[:4])}")
 
     runtime_section = convert_runtime_audit(spark)
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("# PLANS — physical-plan audit (`.explain(\"formatted\")`)\n\n"
                 "Generated by tools/explain_audit.py at sf0.01. Health checks:\n"
                 "filter pushdown reaches the parquet scan, scans are column-pruned,\n"
