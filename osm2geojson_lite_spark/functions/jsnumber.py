@@ -100,6 +100,24 @@ def js_str(value) -> str:
     return str(value)
 
 
+_MAX_INDEX = 2**32 - 2  # the largest array index (ECMA-262 6.1.7)
+
+
+def _is_index(key: str) -> bool:
+    return (key.isdigit() and key.isascii() and (key == "0" or key[0] != "0")
+            and int(key) <= _MAX_INDEX)
+
+
+def _js_items(obj: dict) -> list:
+    """``obj``'s items in JS property order: array-index keys (canonical
+    integers ``0`` .. ``2**32-2``) first, ascending, then the other keys in
+    insertion order.  A key that is not a string is ordered by its
+    ``canonical_json`` text."""
+    items = [(k if isinstance(k, str) else canonical_json(k), v) for k, v in obj.items()]
+    index = sorted((kv for kv in items if _is_index(kv[0])), key=lambda kv: int(kv[0]))
+    return index + [kv for kv in items if not _is_index(kv[0])]
+
+
 def _dump(obj, out: list) -> None:
     if isinstance(obj, str):
         out.append(_quote(obj))
@@ -110,15 +128,27 @@ def _dump(obj, out: list) -> None:
     elif obj is False:
         out.append("false")
     elif isinstance(obj, int):
-        out.append(int.__repr__(obj))
+        if -(2**53) <= obj <= 2**53:
+            out.append(int.__repr__(obj))
+        else:
+            # JS reads the number as a double: past 2**53 it prints rounded,
+            # past the double range it is Infinity, which stringifies as null
+            text = js_str(obj)
+            out.append("null" if text.endswith("Infinity") else text)
     elif isinstance(obj, float):
         out.append(json_number(obj))
     elif isinstance(obj, dict):
+        # the common case, string keys none of which is all digits, costs
+        # one str.isdigit per key
+        try:
+            items = _js_items(obj) if any(map(str.isdigit, obj)) else obj.items()
+        except TypeError:  # a key that is not a string
+            items = _js_items(obj)
         out.append("{")
-        for i, (k, v) in enumerate(obj.items()):
+        for i, (k, v) in enumerate(items):
             if i:
                 out.append(",")
-            out.append(_quote(k if isinstance(k, str) else canonical_json(k)))
+            out.append(_quote(k))
             out.append(":")
             _dump(v, out)
         out.append("}")
@@ -134,8 +164,9 @@ def _dump(obj, out: list) -> None:
 
 
 def canonical_json(obj) -> str:
-    """Serialize like ``JSON.stringify``: compact, insertion order, numbers
-    through :func:`json_number` (reference fixtures show ``1`` not ``1.0``,
+    """Serialize like ``JSON.stringify``: compact, JS property order (array
+    indexes first, then insertion order), numbers as JS prints the double
+    they parse to (reference fixtures show ``1`` not ``1.0``,
     ``0.00001`` not ``1e-05``), strings escaped as ``json.dumps`` with
     ``ensure_ascii=False`` does."""
     out: list = []

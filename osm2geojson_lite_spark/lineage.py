@@ -124,8 +124,7 @@ def bucket_col(key, n_buckets: int):
 
 def convert_with_lineage(docs: DataFrame, output_path: str, lineage_path: str, *,
                          run_id: str | None = None, n_buckets: int = 16,
-                         buckets_per_job: int = 4,
-                         jobs_per_scope: int | None = None, opts=None,
+                         buckets_per_job: int = 4, opts=None,
                          fail_after_jobs: int | None = None,
                          fail_mid_commit: int | None = None) -> str:
     """Run the conversion pipeline checkpointed per bucket group.
@@ -139,20 +138,13 @@ def convert_with_lineage(docs: DataFrame, output_path: str, lineage_path: str, *
     Re-invoking with the same ``run_id`` anti-joins completed buckets and
     processes only the remainder.
 
-    **Compute is shared across commits** (the round-3 fixed-cost fix: the
-    old shape ran the FULL parse/resolve/assemble pipeline once per job, a
-    measured 2.4x tax over a plain write at 16 buckets / 4 jobs).  Jobs are
-    grouped into *scope chunks* of ``jobs_per_scope`` jobs; each chunk runs
-    ``convert()`` ONCE over all its buckets inside one :class:`CacheScope`
-    (which persists and fills its output), and then every commit in the
-    chunk is a cheap cached filter + partition write.  The
-    commit granularity — and therefore the crash-loss window — is unchanged:
-    still ``buckets_per_job`` buckets per lineage record.  What a chunk
-    holds cached bounds executor storage, so ``jobs_per_scope`` is the
-    memory/sharing dial at scale: the default (``None`` = all pending jobs
-    in one chunk) maximizes sharing; a 100 TB run sets it so one chunk's
-    converted output fits the cluster's storage fraction, paying one
-    pipeline pass per chunk instead of per commit.
+    **Compute is shared across commits**: ``convert()`` runs ONCE over all
+    pending buckets inside one :class:`CacheScope` (which persists and fills
+    its output), and then every commit is a cheap cached filter + partition
+    write.  The commit granularity, and therefore the crash-loss window, is
+    still ``buckets_per_job`` buckets per lineage record.  The cache is
+    ``persist()``'s MEMORY_AND_DISK_DESER, so an output larger than storage
+    memory spills to disk rather than failing.
 
     Per-bucket row counts ride on the write via ``df.observe`` — no second
     scan of the sink (at scale that would be a full re-read per checkpoint).
@@ -175,63 +167,46 @@ def convert_with_lineage(docs: DataFrame, output_path: str, lineage_path: str, *
     log = LineageLog(lineage_path)
 
     done = set(log.completed_keys(spark, run_id))
-    all_buckets = [b for b in range(n_buckets) if str(b) not in done]
+    pending = [b for b in range(n_buckets) if str(b) not in done]
+    jobs = [pending[i: i + buckets_per_job] for i in range(0, len(pending), buckets_per_job)]
+    if not jobs:
+        return run_id
 
-    in_bucket = bucket_col(F.col("doc_id"), n_buckets)
-    jobs = [
-        all_buckets[i: i + buckets_per_job]
-        for i in range(0, len(all_buckets), buckets_per_job)
-    ]
-    if jobs_per_scope is None or jobs_per_scope < 1:
-        jobs_per_scope = max(len(jobs), 1)
-    chunks = [
-        jobs[i: i + jobs_per_scope]
-        for i in range(0, len(jobs), jobs_per_scope)
-    ]
-
-    ji = 0
-    for chunk in chunks:
-        chunk_buckets = [b for group in chunk for b in group]
-        subset = docs.filter(in_bucket.isin(chunk_buckets))
-        with CacheScope() as scope:
-            # convert() fills its cache eagerly, so every commit in the
-            # chunk is a filtered read of it, never a pipeline re-run
-            converted = convert(subset, opts, scope=scope).withColumn(
-                "bucket", bucket_col(F.col("doc_id"), n_buckets)
+    subset = docs.filter(bucket_col(F.col("doc_id"), n_buckets).isin(pending))
+    with CacheScope() as scope:
+        # convert() fills its cache eagerly, so every commit is a filtered
+        # read of it, never a pipeline re-run
+        converted = convert(subset, opts, scope=scope).withColumn(
+            "bucket", bucket_col(F.col("doc_id"), n_buckets)
+        )
+        for ji, group in enumerate(jobs):
+            if fail_after_jobs is not None and ji >= fail_after_jobs:
+                raise RuntimeError(
+                    f"injected failure before job {ji} (run {run_id})"
+                )
+            t0 = time.time()
+            result = converted.filter(F.col("bucket").isin(group))
+            obs = Observation(f"lineage-{run_id}-{ji}")
+            observed = result.observe(
+                obs,
+                *[
+                    F.sum(F.when(F.col("bucket") == b, 1).otherwise(0)).alias(f"b{b}")
+                    for b in group
+                ],
             )
-            for group in chunk:
-                if fail_after_jobs is not None and ji >= fail_after_jobs:
-                    raise RuntimeError(
-                        f"injected failure before job {ji} (run {run_id})"
-                    )
-                t0 = time.time()
-                result = converted.filter(F.col("bucket").isin(group))
-                obs = Observation(f"lineage-{run_id}-{ji}")
-                observed = result.observe(
-                    obs,
-                    *[
-                        F.sum(F.when(F.col("bucket") == b, 1).otherwise(0)).alias(f"b{b}")
-                        for b in group
-                    ],
+            (observed.write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("bucket").parquet(output_path))
+            if fail_mid_commit is not None and ji >= fail_mid_commit:
+                raise RuntimeError(
+                    f"injected failure after write, before mark_done of job {ji} "
+                    f"(run {run_id})"
                 )
-                (observed.write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("bucket").parquet(output_path))
-                if fail_mid_commit is not None and ji >= fail_mid_commit:
-                    raise RuntimeError(
-                        f"injected failure after write, before mark_done of job {ji} "
-                        f"(run {run_id})"
-                    )
-                wall_ms = int((time.time() - t0) * 1000)
-                counts = obs.get
-                log.mark_done(
-                    spark, run_id,
-                    [(str(b), int(counts.get(f"b{b}") or 0)) for b in group],
-                    wall_ms,
-                )
-                ji += 1
+            wall_ms = int((time.time() - t0) * 1000)
+            counts = obs.get
+            log.mark_done(
+                spark, run_id,
+                [(str(b), int(counts.get(f"b{b}") or 0)) for b in group],
+                wall_ms,
+            )
     return run_id
-
-
-def read_converted(spark: SparkSession, output_path: str) -> DataFrame:
-    return spark.read.parquet(output_path)

@@ -27,16 +27,15 @@ from .resolve import reachable
 
 
 class CacheScope:
-    """Owns the persisted intermediates of one conversion pipeline.
+    """Owns the persisted output of one conversion pipeline.
 
     Pass an explicit scope to run concurrent ``convert()`` pipelines in one
     session without them unpersisting each other's live caches; call
     ``release()`` (or use as a context manager) once the pipeline's outputs
     have been consumed.  When no scope is passed, ``convert()`` falls back to
     a module-default scope whose previous contents are released on the next
-    scopeless call — the right cadence for bench/test loops, where caches
-    otherwise accumulate until eviction storms set in (measured 83s -> 200s
-    across three runs).
+    scopeless call, so a loop of scopeless conversions holds one cached
+    output at a time instead of piling them up in storage memory.
     """
 
     def __init__(self) -> None:
@@ -44,11 +43,6 @@ class CacheScope:
 
     def persist(self, df: DataFrame) -> DataFrame:
         df = df.persist()
-        self._cached.append(df)
-        return df
-
-    def track(self, df: DataFrame) -> DataFrame:
-        """Adopt an already-persisted frame for release with this scope."""
         self._cached.append(df)
         return df
 
@@ -66,6 +60,8 @@ class CacheScope:
         self.release()
 
 
+# convert() returns a projection of its cached kernel output, which the
+# caller cannot unpersist, so scopeless calls hand the cache to this scope
 _DEFAULT_SCOPE = CacheScope()
 
 

@@ -5,8 +5,9 @@ document's OSM payload (XML or Overpass JSON) into flat *instance* rows — one
 row per OSM object the reference would register in its ``RefElements`` catalog
 (including ways/nodes created inline for relation members,
 ``relation.ts:49-62,79-92``). Deferred foreign keys (the reference's
-``LateBinder``s) are emitted as *ref slots* that the resolve stage executes as
-Spark equi-joins.
+``LateBinder``s) are emitted as *ref slots*.  ``convert()`` resolves them per
+document against in-process dicts (``convert.convert_document``); the join
+plan's resolve stage executes the same slots as Spark equi-joins.
 
 Semantic parity notes (all against /root/reference):
 - XML tokenizer reproduces the regex scan of ``xmlparser.ts:35-109``:
@@ -20,7 +21,7 @@ Semantic parity notes (all against /root/reference):
   floats materialize only at emission (``utils.ts:83-89``).
 - Registration order is the instance id; the live object per composite id is
   the last registered (JS ``Map.set``), while output position is the first
-  registration (``Map`` insertion order), both resolved later in Spark.
+  registration (``Map`` insertion order), both resolved at the resolve step.
 """
 
 from __future__ import annotations

@@ -67,15 +67,6 @@ AUDIO_FEATURES_SCHEMA = (
 RESIZED_SCHEMA = "media_ref string, width int, height int, pixels binary"
 
 
-def media_table(df: DataFrame, *, ref_col: str = "media_ref",
-                kind_col: str = "kind", payload_col: str = "payload") -> DataFrame:
-    return df.select(
-        F.col(ref_col).cast("string").alias("media_ref"),
-        F.col(kind_col).cast("string").alias("kind"),
-        F.col(payload_col).cast("binary").alias("payload"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Deterministic synthetic media (valid uncompressed files, seeded by index)
 # ---------------------------------------------------------------------------

@@ -40,11 +40,15 @@ def get_spark(app_name: str = "osm2geojson-lite-spark", *, cpus: int | None = No
               shuffle_partitions: int | None = None,
               adaptive: bool = True) -> SparkSession:
     """``adaptive``: AQE on by default (cluster-correct: runtime coalesce,
-    skew-join splitting).  The benchmark runners pass ``adaptive=False``: at
-    local scale the conversion DAG has ~50 small exchanges and AQE turns each
-    into a sub-job — measured 4.7x slower from driver-side orchestration
-    alone.  On a real cluster with multi-GB partitions AQE pays for itself;
-    skew in this engine is additionally handled explicitly (salting)."""
+    skew-join splitting).  ``convert()`` has no exchange, so AQE leaves it
+    alone.  The benchmark runners still pass ``adaptive=False``: the
+    companion queries and the benchmark's traced join-plan pass are
+    shuffle-heavy, and AQE makes each of their exchanges its own query
+    stage and re-plans between stages, which adds driver-side work and
+    plan variants (fresh generated classes) at local scale; fixed
+    partition counts also keep runs comparable.  On a real cluster with
+    multi-GB partitions AQE pays for itself; skew in the join plan is
+    additionally handled explicitly (salting)."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:

@@ -121,16 +121,5 @@ def np_cell(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
     return res * _RES_SHIFT + x * _X_SHIFT + y
 
 
-def np_cell_range(lon_min: float, lat_min: float, lon_max: float, lat_max: float,
-                  res: int) -> tuple[int, int, int, int]:
-    """Inclusive (x0, y0, x1, y1) cell-coordinate cover of a bbox."""
-    n = 1 << res
-    x0 = int(np.clip(np.floor((lon_min + 180.0) / 360.0 * n), 0, n - 1))
-    x1 = int(np.clip(np.floor((lon_max + 180.0) / 360.0 * n), 0, n - 1))
-    y0 = int(np.clip(np.floor((lat_min + 90.0) / 180.0 * n), 0, n - 1))
-    y1 = int(np.clip(np.floor((lat_max + 90.0) / 180.0 * n), 0, n - 1))
-    return x0, y0, x1, y1
-
-
 def cell_id(x: int, y: int, res: int) -> int:
     return res * _RES_SHIFT + x * _X_SHIFT + y

@@ -25,15 +25,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from .cells import cell_col, cell_size_deg, neighbor_cells_col
 
-from ..operators.convert import CacheScope
-
-# the final round's persisted `remaining` frame is still referenced by the
-# lazily-returned brute-force branch, so it cannot be unpersisted before the
-# caller consumes the result.  Scopeless calls recycle this module-default
-# scope on the next call; pass an explicit CacheScope to run concurrent
-# knn_join pipelines in one session (same contract as operators.convert).
-_DEFAULT_SCOPE = CacheScope()
-
 
 def _topk(cands: DataFrame, k: int) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(), F.col("neighbor_id").asc())
@@ -67,8 +58,7 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
              query_id: str = "query_id", point_id: str = "point_id",
              q_lon: str = "lon", q_lat: str = "lat",
              p_lon: str = "lon", p_lat: str = "lat",
-             broadcast_queries: bool = True,
-             scope: CacheScope | None = None) -> DataFrame:
+             broadcast_queries: bool = True) -> DataFrame:
     """-> (query_id, neighbor_id, dist2, rank) with exactly min(k, |points|)
     rows per query, identical to brute force."""
     q = queries.select(
@@ -102,10 +92,6 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
     plan += [(res_min, 2), (res_min, 4), (res_min, 8)]
     if n_points is not None and n_points <= 3 * k:
         plan = []  # tiny corpus: brute force is already optimal
-
-    if scope is None:
-        _DEFAULT_SCOPE.release()
-        scope = _DEFAULT_SCOPE
 
     results = None
     remaining = q
@@ -151,9 +137,13 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
         if n_points is None and n_remaining <= 1_000:
             break  # few stragglers: brute force them without another round
 
-    # brute-force fallback for stragglers (sparse regions / tiny point sets)
+    # the returned plan is lazy, so no cache outlives the call: the
+    # brute-force branch recomputes the final `remaining` like every
+    # round's `done` recomputes its chain
     if prev_cached is not None:
-        scope.track(prev_cached)  # already persisted above
+        prev_cached.unpersist()
+
+    # brute-force fallback for stragglers (sparse regions / tiny point sets)
     leftover = F.broadcast(remaining) if broadcast_queries else remaining
     brute = _topk(
         leftover.crossJoin(p).select("query_id", "neighbor_id", dist2.alias("dist2")), k

@@ -20,6 +20,23 @@ def spark():
     s.stop()
 
 
+def salted_graphs(docs, salt: int) -> tuple[dict, dict]:
+    """The join plan's resolved graph for ``docs`` unsalted and with
+    ``salt``: each ``resolve_graph`` frame as sorted row reprs."""
+    from osm2geojson_lite_spark.operators.convert import assemble_payload
+    from osm2geojson_lite_spark.operators.parse import parse_documents
+    from osm2geojson_lite_spark.operators.resolve import resolve_graph
+
+    instances = parse_documents(assemble_payload(docs)).persist()
+    try:
+        return tuple(
+            {k: sorted(map(repr, df.collect())) for k, df in
+             resolve_graph(instances, salt=s).items()}
+            for s in (None, salt))
+    finally:
+        instances.unpersist()
+
+
 def normalize(obj):
     """Number-insensitive deep form: ints -> floats (JS has one number type)."""
     if isinstance(obj, bool):

@@ -1,10 +1,12 @@
 """convert(): the per-document stream against the join plan, its plan
-shape and output batching, compile-once sessions and origin-adjacent number
-formatting."""
+shape and output batching, compile-once sessions, origin-adjacent number
+formatting, the golden corpus, cache scopes and feature-id escaping."""
 
 from __future__ import annotations
 
 import json
+import os
+from pathlib import Path
 
 import pandas as pd
 from hypothesis import HealthCheck, given, settings, strategies as st
@@ -12,12 +14,16 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 from osm2geojson_lite_spark import CacheScope, Options, convert
 from osm2geojson_lite_spark.operators import convert as convert_mod
 from osm2geojson_lite_spark.sources.synth import (
+    REFERENCE_EXPECTED_DIR,
     SPAN_SCHEMA,
     _doc_payload,
+    fixture_documents,
     generate_documents,
     wrap_payload,
 )
 from perfbench.layers import Tracer, layered_convert
+
+from .conftest import needs_reference, normalize
 
 
 def test_second_convert_compiles_no_new_classes(spark):
@@ -227,3 +233,134 @@ def test_tiny_flush_budget_keeps_output(spark, monkeypatch):
     monkeypatch.setattr(convert_mod, "FLUSH_CHARS", 8)
     with CacheScope() as scope:
         assert sorted(convert(docs, opts, scope=scope).collect()) == want
+
+
+# ---------------------------------------------------------------------------
+# feature-id JSON escaping (ADVICE low)
+# ---------------------------------------------------------------------------
+
+
+def test_node_kernel_escapes_feature_id():
+    from osm2geojson_lite_spark.operators.assemble import node_features_kernel
+
+    pdf = pd.DataFrame(
+        {
+            "doc_id": ["d"],
+            "out_pos": [0],
+            "composite": ['node/1"\\evil'],
+            "props_json": ["{}"],
+            "tags_json": ["{}"],
+            "lon": ["1.5"],
+            "lat": ["2.5"],
+        }
+    )
+    [out] = list(node_features_kernel(iter([pdf])))
+    feature = json.loads(out["feature_json"][0])  # must be valid JSON
+    assert feature["id"] == 'node/1"\\evil'
+
+
+def test_way_kernel_escapes_feature_id():
+    from osm2geojson_lite_spark.operators.assemble import way_features_kernel
+
+    pdf = pd.DataFrame(
+        {
+            "doc_id": ["d"],
+            "out_pos": [0],
+            "composite": ['way/"q'],
+            "props_json": ["{}"],
+            "tags_json": ["{}"],
+            "tag_events_json": ["[]"],
+            "coords_json": ['[["0","0"],["1","1"]]'],
+        }
+    )
+    [out] = list(way_features_kernel(iter([pdf])))
+    feature = json.loads(out["feature_json"][0])
+    assert feature["id"] == 'way/"q'
+
+
+# ---------------------------------------------------------------------------
+# committed conversion golden must match the current engine output
+# ---------------------------------------------------------------------------
+
+
+def test_convert_corpus_golden_still_current(spark):
+    """Drift guard for tests/golden/convert_corpus_100.json (the
+    osm_convert_corpus oracle): converting a sample of the seed-42 corpus
+    must reproduce the committed md5s exactly."""
+    import json as _json
+
+    from pyspark.sql import functions as F
+
+    from osm2geojson_lite_spark import Options, convert
+    from osm2geojson_lite_spark.sources.synth import generate_documents
+
+    with open(Path(__file__).parent / "golden" / "convert_corpus_100.json",
+              encoding="utf-8") as f:
+        golden = {d: (n, h) for d, n, h in _json.load(f)}
+    sample_ids = sorted(golden)[:12]
+    docs = generate_documents(spark, 100).filter(F.col("doc_id").isin(sample_ids))
+    out = convert(docs, Options(complete_feature=True)).select(
+        "doc_id", F.md5("geojson").alias("h")
+    ).collect()
+    assert len(out) == len(sample_ids)
+    for r in out:
+        assert r["h"] == golden[r["doc_id"]][1], r["doc_id"]
+
+
+def _expected(name: str) -> dict:
+    with open(os.path.join(REFERENCE_EXPECTED_DIR, name + ".geojson")) as f:
+        return json.load(f)
+
+
+@needs_reference
+def test_interleaved_converts_no_cross_unpersist(spark):
+    """Two convert() pipelines with explicit scopes interleaved in one
+    session: building the second must not unpersist the first's live
+    caches, and both outputs stay correct."""
+    docs_a = fixture_documents(spark).filter("doc_id = 'relation.json'")
+    docs_b = fixture_documents(spark).filter("doc_id = 'route.osm'")
+
+    with CacheScope() as scope_a, CacheScope() as scope_b:
+        out_a = convert(docs_a, Options(complete_feature=True), scope=scope_a)
+        # building B materializes B's caches while A's scope is live
+        out_b = convert(docs_b, Options(complete_feature=True), scope=scope_b)
+
+        # A's persisted intermediates must still be cached
+        assert scope_a._cached, "scope A tracked no caches"
+        for df in scope_a._cached:
+            assert df.storageLevel.useMemory, "scope A cache was unpersisted"
+
+        rows_a = out_a.collect()
+        rows_b = out_b.collect()
+
+    assert normalize(json.loads(rows_a[0]["geojson"])) == normalize(
+        _expected("relation.json"))
+    assert normalize(json.loads(rows_b[0]["geojson"])) == normalize(
+        _expected("route.osm"))
+
+
+@needs_reference
+def test_scope_release_unpersists(spark):
+    docs = fixture_documents(spark).filter("doc_id = 'way.json'")
+    scope = CacheScope()
+    convert(docs, Options(complete_feature=True), scope=scope).collect()
+    cached = list(scope._cached)
+    assert cached
+    scope.release()
+    for df in cached:
+        assert df.storageLevel.useMemory is False
+
+
+@needs_reference
+def test_fused_emit_default_mode_matches_reference(spark):
+    """Default mode through the fused emit: relation docs yield the first
+    relation's bare geometry; feature-less docs yield an empty collection."""
+    docs = fixture_documents(spark).filter(
+        "doc_id in ('relation.json', 'empty.json')"
+    )
+    out = {r["doc_id"]: json.loads(r["geojson"])
+           for r in convert(docs, Options(complete_feature=False)).collect()}
+    exp = _expected("relation.json")
+    # bare geometry == geometry of the first feature of the full collection
+    assert normalize(out["relation.json"]) == normalize(exp["features"][0]["geometry"])
+    assert out["empty.json"] == {"type": "FeatureCollection", "features": []}

@@ -1,81 +1,9 @@
-"""Round-3 regression tests: session-scoped cache management (VERDICT r2 #6)
-and the fused emit aggregation (collections + first-relation bare geometry
-in one groupBy)."""
+"""pipeline.multimodal media codecs: PNG, PPM and GIF decoding against
+the synthetic media spec, and decode_media's skip accounting."""
 
 from __future__ import annotations
 
-import json
-import os
-from pathlib import Path
-
 import pytest
-
-from osm2geojson_lite_spark import CacheScope, Options, convert
-from osm2geojson_lite_spark.sources.synth import (
-    REFERENCE_EXPECTED_DIR,
-    fixture_documents,
-)
-
-from .conftest import needs_reference, normalize
-
-
-def _expected(name: str) -> dict:
-    with open(os.path.join(REFERENCE_EXPECTED_DIR, name + ".geojson")) as f:
-        return json.load(f)
-
-
-@needs_reference
-def test_interleaved_converts_no_cross_unpersist(spark):
-    """Two convert() pipelines with explicit scopes interleaved in one
-    session: building the second must not unpersist the first's live
-    caches, and both outputs stay correct."""
-    docs_a = fixture_documents(spark).filter("doc_id = 'relation.json'")
-    docs_b = fixture_documents(spark).filter("doc_id = 'route.osm'")
-
-    with CacheScope() as scope_a, CacheScope() as scope_b:
-        out_a = convert(docs_a, Options(complete_feature=True), scope=scope_a)
-        # building B materializes B's caches while A's scope is live
-        out_b = convert(docs_b, Options(complete_feature=True), scope=scope_b)
-
-        # A's persisted intermediates must still be cached
-        assert scope_a._cached, "scope A tracked no caches"
-        for df in scope_a._cached:
-            assert df.storageLevel.useMemory, "scope A cache was unpersisted"
-
-        rows_a = out_a.collect()
-        rows_b = out_b.collect()
-
-    assert normalize(json.loads(rows_a[0]["geojson"])) == normalize(
-        _expected("relation.json"))
-    assert normalize(json.loads(rows_b[0]["geojson"])) == normalize(
-        _expected("route.osm"))
-
-
-@needs_reference
-def test_scope_release_unpersists(spark):
-    docs = fixture_documents(spark).filter("doc_id = 'way.json'")
-    scope = CacheScope()
-    convert(docs, Options(complete_feature=True), scope=scope).collect()
-    cached = list(scope._cached)
-    assert cached
-    scope.release()
-    for df in cached:
-        assert df.storageLevel.useMemory is False
-
-
-@needs_reference
-def test_fused_emit_default_mode_matches_reference(spark):
-    """Default mode through the fused emit: relation docs yield the first
-    relation's bare geometry; feature-less docs yield an empty collection."""
-    docs = fixture_documents(spark).filter(
-        "doc_id in ('relation.json', 'empty.json')"
-    )
-    out = {r["doc_id"]: json.loads(r["geojson"])
-           for r in convert(docs, Options(complete_feature=False)).collect()}
-    exp = _expected("relation.json")
-    # bare geometry == geometry of the first feature of the full collection
-    assert normalize(out["relation.json"]) == normalize(exp["features"][0]["geometry"])
-    assert out["empty.json"] == {"type": "FeatureCollection", "features": []}
 
 
 # ---------------------------------------------------------------------------
@@ -174,44 +102,6 @@ def test_media_decode_matches_spec_including_png():
                   "n_samples"):
             assert meta[k] == spec[k], (i, k)
     assert "png" in fmts  # corpus now includes compressed-container images
-
-
-# ---------------------------------------------------------------------------
-# trained IVF quantizer: engine k-means == independently generated golden
-# ---------------------------------------------------------------------------
-
-
-def test_kmeans_centroids_match_golden(spark):
-    import json as _json
-
-    from osm2geojson_lite_spark.pipeline.similarity import kmeans_centroids
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    got = kmeans_centroids(emb, n_centroids=16, n_iters=20, sample_size=512,
-                           seed=0)
-    with open(Path(__file__).parent / "golden" / "ivf_centroids.json") as f:
-        golden = _json.load(f)
-    assert len(got) == len(golden) == 16
-    for c, (g_vec, o_vec) in enumerate(zip(got, golden)):
-        assert g_vec == o_vec, f"centroid {c} diverged from golden"
-
-
-# ---------------------------------------------------------------------------
-# events DSL: literals containing operator/$ tokens survive compilation
-# ---------------------------------------------------------------------------
-
-
-def test_condition_to_sql_literals_untouched():
-    from osm2geojson_lite_spark.operators.events import condition_to_sql
-
-    assert condition_to_sql('$name=="a&&b"') == "element_at(attrs, 'name') = 'a&&b'"
-    assert condition_to_sql('$k=="$id"') == "element_at(attrs, 'k') = '$id'"
-    assert condition_to_sql('$v!="x==y"') == "element_at(attrs, 'v') <> 'x==y'"
-    # numeric coercion still applies outside literals
-    assert (condition_to_sql("$lat>39")
-            == "cast(element_at(attrs, 'lat') as double) > 39")
-    # quotes inside literals escape to doubled SQL quotes
-    assert condition_to_sql('$a=="it\'s"') == "element_at(attrs, 'a') = 'it''s'"
 
 
 def test_png_palette_and_gray_variants():
@@ -348,3 +238,85 @@ def test_gif_roundtrip_and_interlace():
              + ct.tobytes() + b"\x2C" + _s.pack("<HHHHB", 0, 0, 7, 13, 0x40)
              + bytes([ms]) + bytes(blocks) + b"\x3B")
     assert (decode_gif_pixels(gif_i) == p).all()
+
+
+def _offset_gif(screen_w, screen_h, left, top, frame):
+    """Hand-built GIF89a: logical screen (screen_w, screen_h), one frame of
+    ``frame`` (h, w, 3) placed at (left, top) — the spec-valid sub-frame
+    shape the decoder previously mispositioned (ADVICE r3)."""
+    import struct as _struct
+
+    import numpy as np
+
+    from osm2geojson_lite_spark.pipeline.multimodal import _lzw_encode
+
+    h, w, _ = frame.shape
+    colors, inverse = np.unique(frame.reshape(-1, 3), axis=0,
+                                return_inverse=True)
+    ct_bits = max(1, int(len(colors) - 1).bit_length())
+    ct = np.zeros((1 << ct_bits, 3), np.uint8)
+    ct[: len(colors)] = colors
+    min_size = max(2, ct_bits)
+    lzw = _lzw_encode(inverse.astype(np.uint8).tobytes(), min_size)
+    blocks = bytearray()
+    for i in range(0, len(lzw), 255):
+        chunk = lzw[i:i + 255]
+        blocks.append(len(chunk))
+        blocks.extend(chunk)
+    blocks.append(0)
+    bg_index = 0
+    return (b"GIF89a"
+            + _struct.pack("<HHBBB", screen_w, screen_h,
+                           0x80 | (ct_bits - 1), bg_index, 0)
+            + ct.tobytes()
+            + b"\x2C" + _struct.pack("<HHHHB", left, top, w, h, 0)
+            + bytes([min_size]) + bytes(blocks)
+            + b"\x3B")
+
+
+def test_gif_offset_frame_composited():
+    """A frame smaller than the logical screen decodes to the SCREEN size
+    with the frame at (left, top) and background color elsewhere."""
+    import numpy as np
+
+    from osm2geojson_lite_spark.pipeline.multimodal import decode_gif_pixels
+
+    frame = np.array([[[255, 0, 0], [0, 255, 0]],
+                      [[0, 0, 255], [255, 0, 0]]], np.uint8)
+    px = decode_gif_pixels(_offset_gif(5, 4, 2, 1, frame))
+    assert px.shape == (4, 5, 3)
+    assert (px[1:3, 2:4] == frame).all()
+    # background = palette[bg_index=0] (lowest color after np.unique sort)
+    bg = sorted(map(tuple, frame.reshape(-1, 3).tolist()))[0]
+    assert tuple(px[0, 0]) == bg
+    assert tuple(px[3, 4]) == bg
+    # out-of-bounds placement is corrupt, not silently cropped
+    with pytest.raises(ValueError, match="logical screen"):
+        decode_gif_pixels(_offset_gif(3, 3, 2, 2, frame))
+
+
+def test_decode_media_skip_narrow_and_counted(spark):
+    """ADVICE r3: on_error='skip' drops ONLY declared decode failures, with
+    an observable dropped count; a decoder BUG (TypeError) still raises."""
+    from osm2geojson_lite_spark.pipeline import multimodal as mm
+
+    rows = [
+        ("ok://1", "image", bytearray(mm.encode_bmp(
+            __import__("numpy").zeros((2, 2, 3), "uint8")))),
+        ("bad://1", "image", bytearray(b"GIF89a\x00")),   # truncated
+        ("bad://2", "image", bytearray(b"\x00\x01garbage")),
+    ]
+    media = spark.createDataFrame(
+        rows, "media_ref string, kind string, payload binary")
+    acc = spark.sparkContext.accumulator(0)
+    out = mm.decode_media(media, on_error="skip", dropped_counter=acc)
+    got = out.collect()
+    assert [r["media_ref"] for r in got] == ["ok://1"]
+    assert acc.value == 2
+
+    # the skip net is the declared tuple only — programming-bug exception
+    # types are NOT in it, so a decoder regression fails loudly even in
+    # skip mode (the round-3 bare-Exception catch hid them)
+    assert TypeError not in mm._DECODE_SKIP_ERRORS
+    assert AttributeError not in mm._DECODE_SKIP_ERRORS
+    assert KeyError not in mm._DECODE_SKIP_ERRORS

@@ -678,3 +678,41 @@ def test_mixture_epochs_oversampling(spark):
                    mixture_epochs(df.repartition(7), weights, total,
                                   group_col="source").collect())
     assert again == sorted((s, k, e) for s, kes in got.items() for k, e in kes)
+
+
+def _h(key, salt=0):
+    return int(hashlib.md5(f"{salt}:{key}".encode()).hexdigest()[:8], 16)
+
+
+def test_quota_cap_skewed_group_matches_naive_rank(spark):
+    """quota_cap == the naive full hash-rank selection on a skewed corpus
+    (one 4000-row group next to 40-row groups) — the prefilter is a pure
+    optimization, and undersized groups keep everything."""
+    from osm2geojson_lite_spark.pipeline.sample import quota_cap
+
+    rows = ([(f"big{i}", "big") for i in range(4000)]
+            + [(f"s1-{i}", "s1") for i in range(40)]
+            + [(f"s2-{i}", "s2") for i in range(3)])
+    df = spark.createDataFrame(rows, "doc_id string, domain string")
+    out = quota_cap(df.repartition(23), "domain", 5)
+    got = {}
+    for r in out.collect():
+        got.setdefault(r["domain"], set()).add(r["doc_id"])
+    for dom, n in (("big", 5), ("s1", 5), ("s2", 3)):
+        keys = [k for k, d in rows if d == dom]
+        want = set(sorted(keys, key=lambda k: (_h(k), k))[:n])
+        assert got[dom] == want, dom
+    # column order preserved through the prefilter join
+    assert out.columns == ["doc_id", "domain"]
+
+
+def test_quota_cap_quota_one_large_group(spark):
+    """quota=1 over a large group survives the prefilter (slack term)."""
+    from osm2geojson_lite_spark.pipeline.sample import quota_cap
+
+    df = spark.createDataFrame(
+        [(f"k{i}", "g") for i in range(5000)], "doc_id string, domain string")
+    out = quota_cap(df, "domain", 1).collect()
+    keys = [f"k{i}" for i in range(5000)]
+    assert {r["doc_id"] for r in out} == {
+        min(keys, key=lambda k: (_h(k), k))}

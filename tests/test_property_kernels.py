@@ -173,15 +173,14 @@ def test_js_number_matches_node(values):
     assert [js_number(v) for v in values] == _node_map("String", values)
 
 
-# JSON values whose JS and Python readings agree: no lone surrogates, ints
-# a double holds exactly, and no array-index-like keys (JS objects list
-# those first, whatever the insertion order)
+# JSON values with no lone surrogates; ints of any size (JS reads them as
+# doubles) and digit keys (JS lists array-index keys first, ascending)
 _json_leaf = st.one_of(
     st.floats(allow_nan=False, allow_infinity=False), st.booleans(), st.none(),
-    st.integers(-(2**53), 2**53), st.text(st.characters(blacklist_categories=("Cs",)), max_size=8))
+    st.integers(), st.text(st.characters(blacklist_categories=("Cs",)), max_size=8))
 _json_value = st.recursive(_json_leaf, lambda kids: st.one_of(
     st.lists(kids, max_size=4),
-    st.dictionaries(st.from_regex(r"[a-z_:]{1,6}", fullmatch=True), kids, max_size=4)),
+    st.dictionaries(st.from_regex(r"[a-z_:0-9]{1,6}", fullmatch=True), kids, max_size=4)),
     max_leaves=12)
 
 
@@ -190,6 +189,21 @@ _json_value = st.recursive(_json_leaf, lambda kids: st.one_of(
 @settings(max_examples=40, deadline=None)
 def test_canonical_json_matches_node_stringify(objs):
     assert [canonical_json(o) for o in objs] == _node_map("x => JSON.stringify(x)", objs)
+
+
+@pytest.mark.parametrize("obj, want", [
+    ({"b": 1, "1": 2}, '{"1":2,"b":1}'),
+    ({"b": 1, "4294967295": 2, "4294967294": 3, "01": 4, "10": 5, "9": 6, "-1": 7},
+     '{"9":6,"10":5,"4294967294":3,"b":1,"4294967295":2,"01":4,"-1":7}'),
+    ({"\u0663": 1, "a": 2, "0": 3}, '{"0":3,"\u0663":1,"a":2}'),
+    ([2**53, 2**53 + 1, -(2**60) - 1], "[9007199254740992,9007199254740992,-1152921504606847000]"),
+    ([10**400, -(10**400)], "[null,null]"),
+])
+def test_canonical_json_fixed_cases(obj, want):
+    """What node's ``JSON.stringify(JSON.parse(text))`` prints: array-index
+    keys first, ascending (``4294967295`` and ``01`` are not indexes), and
+    integers rounded through the double they parse to."""
+    assert canonical_json(obj) == want
 
 
 @pytest.mark.parametrize("x, want", [

@@ -1,4 +1,5 @@
-"""relation_closure: the sorted-stream BFS against a plain-Python closure."""
+"""resolve: the sorted-stream relation closure against a plain-Python
+closure, and resolve_graph's salting against the unsalted graph."""
 
 from __future__ import annotations
 
@@ -6,6 +7,9 @@ import pandas as pd
 from hypothesis import example, given, settings, strategies as st
 
 from osm2geojson_lite_spark.operators.resolve import _closure_stream, relation_closure
+from osm2geojson_lite_spark.sources.synth import generate_documents
+
+from .conftest import salted_graphs
 
 
 def reference_closure(roots, edges) -> list[tuple]:
@@ -74,3 +78,11 @@ def test_closure_stream_carries_a_straddling_document():
         for r in pdf.itertuples(index=False)
     )
     assert got == [("a", 1, 1), ("a", 1, 2), ("a", 1, 3), ("b", 7, 7)]
+
+
+def test_resolve_graph_salted_identical(spark):
+    """Explicit skew salting of the node-ref join must not change any
+    resolved frame."""
+    plain, salted = salted_graphs(generate_documents(spark, 20), salt=4)
+    assert all(plain[k] for k in ("live", "way_coords", "members"))
+    assert salted == plain

@@ -144,3 +144,21 @@ def test_subscription_is_catalyst_filter_not_udf(spark):
     plan = subscribe(xml_events(df), "<a[$x==1]>")._jdf.queryExecution().executedPlan().toString()
     assert "Filter" in plan
     assert "pythonUDF" not in plan  # predicate runs JVM-side
+
+
+# ---------------------------------------------------------------------------
+# events DSL: literals containing operator/$ tokens survive compilation
+# ---------------------------------------------------------------------------
+
+
+def test_condition_to_sql_literals_untouched():
+    from osm2geojson_lite_spark.operators.events import condition_to_sql
+
+    assert condition_to_sql('$name=="a&&b"') == "element_at(attrs, 'name') = 'a&&b'"
+    assert condition_to_sql('$k=="$id"') == "element_at(attrs, 'k') = '$id'"
+    assert condition_to_sql('$v!="x==y"') == "element_at(attrs, 'v') <> 'x==y'"
+    # numeric coercion still applies outside literals
+    assert (condition_to_sql("$lat>39")
+            == "cast(element_at(attrs, 'lat') as double) > 39")
+    # quotes inside literals escape to doubled SQL quotes
+    assert condition_to_sql('$a=="it\'s"') == "element_at(attrs, 'a') = 'it''s'"

@@ -1,7 +1,7 @@
 """Measure ANN recall@k vs tuning knobs (VERDICT r2 #4 / r3 #1): sign-LSH
 (single- and multi-table), IVF (lowest-id, trained k-means, spilled
 k-means) against the exact brute-force top-k.  Results go into BENCH.md's
-recall table and /root/repo/ann_recall_table.json.
+recall table and the checkout's ann_recall_table.json.
 
 TWO query panels, because the historical panel is biased: queries 0-31
 CONTAIN the 16 vectors the lowest-id quantizer uses as centroids, so for
@@ -17,9 +17,11 @@ Usage: python tools/ann_recall_table.py [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -128,9 +130,10 @@ def main() -> None:
         "kmeans": imbalance(cents),
     }
     print(json.dumps(out, indent=2))
-    with open("/root/repo/ann_recall_table.json", "w") as f:
+    path = os.path.join(ROOT, "ann_recall_table.json")
+    with open(path, "w") as f:
         json.dump(out, f, indent=2)
-    print("wrote /root/repo/ann_recall_table.json")
+    print(f"wrote {path}")
 
 
 if __name__ == "__main__":

@@ -22,7 +22,8 @@ import sys
 import time
 import zipfile
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import pyspark
 
@@ -33,13 +34,13 @@ PY = sys.executable
 
 
 def build_engine_zip(path: str = "/tmp/engine.zip") -> str:
-    root = "/root/repo/osm2geojson_lite_spark"
+    root = os.path.join(ROOT, "osm2geojson_lite_spark")
     with zipfile.ZipFile(path, "w") as z:
         for dirpath, _dirs, files in os.walk(root):
             for fn in files:
                 if fn.endswith(".py"):
                     full = os.path.join(dirpath, fn)
-                    z.write(full, os.path.relpath(full, "/root/repo"))
+                    z.write(full, os.path.relpath(full, ROOT))
     return path
 
 
@@ -70,7 +71,7 @@ def run_job(n_executors: int, n_docs: int, py_files: str, *,
 import hashlib, json, time
 from pyspark.sql import SparkSession, functions as F
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {ROOT!r})
 from osm2geojson_lite_spark import Options, convert
 from osm2geojson_lite_spark.sources.synth import generate_documents
 
@@ -120,7 +121,7 @@ spark.stop()
     env = dict(os.environ, PYSPARK_PYTHON=PY, PYSPARK_DRIVER_PYTHON=PY,
                SPARK_HOME=SPARK_HOME)
     proc = subprocess.run([PY, "-c", code], capture_output=True, text=True,
-                          timeout=3000, env=env, cwd="/root/repo")
+                          timeout=3000, env=env, cwd=ROOT)
     for line in proc.stdout.splitlines():
         if line.startswith("RESULT "):
             return json.loads(line[len("RESULT "):])
@@ -131,7 +132,7 @@ def main() -> None:
     n_docs = 64000
     aqe = False
     timed_execs = 3
-    out_path = "/root/repo/cluster_bench_result.json"
+    out_path = os.path.join(ROOT, "cluster_bench_result.json")
     args = sys.argv[1:]
     for i, a in enumerate(args):
         if a == "--docs":
@@ -154,7 +155,6 @@ def main() -> None:
     # drops to 5.9s and in-dataflow occupancy at 4 executors clears 0.90
     # (cluster_bench_r4.json vs _r4b.json, same throughput within noise —
     # the robust choice for real clusters where stragglers dominate).
-    sys.path.insert(0, "/root/repo")
     from osm2geojson_lite_spark.session import wave_aligned
 
     input_parts = int(os.environ.get(

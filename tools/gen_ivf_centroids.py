@@ -17,11 +17,13 @@ intentional change to the training procedure:
 from __future__ import annotations
 
 import json
+import os
 
 import duckdb
 
 EMB = "/root/testdata/sf0.01/embeddings.parquet"
-OUT = "/root/repo/tests/golden/ivf_centroids.json"
+GOLDEN = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests", "golden")
+OUT = os.path.join(GOLDEN, "ivf_centroids.json")
 N_CENTROIDS, N_ITERS, SAMPLE, SEED = 16, 20, 512, 0
 
 

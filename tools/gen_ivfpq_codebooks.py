@@ -19,12 +19,14 @@ from __future__ import annotations
 
 import json
 import math
+import os
 
 import duckdb
 
 EMB = "/root/testdata/sf0.01/embeddings.parquet"
-CENTS = "/root/repo/tests/golden/ivf_centroids.json"
-OUT = "/root/repo/tests/golden/ivfpq_codebooks.json"
+GOLDEN = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests", "golden")
+CENTS = os.path.join(GOLDEN, "ivf_centroids.json")
+OUT = os.path.join(GOLDEN, "ivfpq_codebooks.json")
 M, K, N_ITERS, SAMPLE, SEED = 16, 16, 20, 512, 0
 
 

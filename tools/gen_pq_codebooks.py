@@ -17,11 +17,13 @@ after an intentional change to the training procedure:
 from __future__ import annotations
 
 import json
+import os
 
 import duckdb
 
 EMB = "/root/testdata/sf0.01/embeddings.parquet"
-OUT = "/root/repo/tests/golden/pq_codebooks.json"
+OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                   "tests", "golden", "pq_codebooks.json")
 M, K, N_ITERS, SAMPLE, SEED = 16, 16, 20, 512, 0
 
 

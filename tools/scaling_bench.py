@@ -30,7 +30,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def worker(cpus: int, n_docs: int, sf_dir: str) -> None:
@@ -161,7 +162,7 @@ def main() -> None:
         proc = subprocess.run(
             pin + [sys.executable, os.path.abspath(__file__), "--worker",
                    str(cpus), str(n_docs), sf_dir],
-            capture_output=True, text=True, timeout=3000, cwd="/root/repo",
+            capture_output=True, text=True, timeout=3000, cwd=ROOT,
             env=env,
         )
         line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
@@ -202,7 +203,7 @@ def main() -> None:
            "all_byte_identical": all(r["byte_identical"] for r in runs),
            "runs": runs}
     suffix = "_repeats" if repeats > 1 else ""
-    path = f"/root/repo/scaling_result_{n_cpus}v{n4_cpus}{suffix}.json"
+    path = os.path.join(ROOT, f"scaling_result_{n_cpus}v{n4_cpus}{suffix}.json")
     with open(path, "w") as f:
         json.dump(out, f, indent=2)
     print(f"median efficiency {median} (min {effs[0]}, max {effs[-1]}); "
