@@ -309,8 +309,9 @@ def convert_document(doc_id, payload, opts: Options) -> tuple[str, int, list]:
             adj = {ri: e["subs"] for ri, e in rels.items()}
             over = [rec["inst"] for rec in roots
                     if sum(rows.get(ri, 0) for ri in reachable(rec["inst"], adj)) > cap]
+        skipped = set(over)
         for rec in roots:
-            if rec["inst"] in over:
+            if rec["inst"] in skipped:
                 continue
             out_pos = first_seq[rec["composite"]]
             for sub_seq, feature in enumerate(assemble_relation(rels, rec["inst"])):

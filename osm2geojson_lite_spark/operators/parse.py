@@ -471,14 +471,6 @@ def _parse_into(doc_id, payload: str, out: dict) -> None:
             json.dumps(bounds) if bounds is not None else None)
 
 
-def parse_document(doc_id, payload: str) -> list[dict]:
-    """Parse one document into flat instance rows (Spark-ready)."""
-    cols = {c: [] for c in _INSTANCE_COLS}
-    _parse_into(doc_id, payload, cols)
-    n = len(cols["doc_id"])
-    return [{c: cols[c][i] for c in _INSTANCE_COLS} for i in range(n)]
-
-
 # ---------------------------------------------------------------------------
 # Spark operator
 # ---------------------------------------------------------------------------

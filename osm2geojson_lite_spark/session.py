@@ -8,6 +8,7 @@ cluster the same conf applies minus master/driver-memory, submitted via
 from __future__ import annotations
 
 import os
+import sys
 import warnings
 from collections.abc import Mapping
 from contextlib import contextmanager
@@ -173,3 +174,51 @@ def prewarm_python_workers(spark: SparkSession, *, cores: int | None = None) -> 
         .mapInPandas(lambda batches: batches, schema="id long")
         .write.format("noop").mode("overwrite").save()
     )
+
+
+def skip_unchanged_zip_rereads() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only when
+    its ``(st_mtime_ns, st_size)`` changed since the archive was last read.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task, so that files shipped with the task become importable
+    (``pyspark/worker_util.py`` ``setup_spark_files``).  On CPython < 3.12
+    that makes every ``zipimporter`` in ``sys.path_importer_cache`` re-read
+    its archive's whole directory right away; 3.12 made the re-read lazy
+    (gh-103200).  A PySpark 4.1 worker holds 16 of them (12 package paths
+    inside ``pyspark.zip``, two for the spark-core jar, two for py4j), so
+    each task spent 0.12-0.17 s re-reading archives nobody changed: more
+    than a ``convert()`` task's own work at local[2].  Now the importers of one archive share one read,
+    and only an archive whose stamp moved is read again, so a ``pyFiles``
+    zip re-added with new content still is.
+
+    Idempotent, and a no-op on Python 3.12+.  The package calls it on
+    import inside a Python worker only (``__init__.py``); the driver's
+    import machinery is left as it is."""
+    if sys.version_info >= (3, 12):
+        return
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "rereads_changed_only", False):
+        return
+    stamps: dict[str, tuple[int, int] | None] = {}  # archive -> stamp at last read
+
+    def invalidate_caches(self):
+        archive = self.archive
+        try:
+            st = os.stat(archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        files = zipimport._zip_directory_cache.get(archive)
+        if stamp is not None and files is not None and stamps.get(archive) == stamp:
+            self._files = files
+            return
+        # stat before reading: a write racing the read leaves an old stamp,
+        # so the next call reads again
+        reread(self)
+        stamps[archive] = stamp if archive in zipimport._zip_directory_cache else None
+
+    invalidate_caches.rereads_changed_only = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches

@@ -20,6 +20,16 @@ def spark():
     s.stop()
 
 
+def parse_document(doc_id, payload: str) -> list[dict]:
+    """One document's instance rows as ``parse_documents`` would emit
+    them, one dict per row, without Spark."""
+    from osm2geojson_lite_spark.operators.parse import _INSTANCE_COLS, _parse_into
+
+    cols = {c: [] for c in _INSTANCE_COLS}
+    _parse_into(doc_id, payload, cols)
+    return [dict(zip(_INSTANCE_COLS, row)) for row in zip(*cols.values())]
+
+
 def salted_graphs(docs, salt: int) -> tuple[dict, dict]:
     """The join plan's resolved graph for ``docs`` unsalted and with
     ``salt``: each ``resolve_graph`` frame as sorted row reprs."""

@@ -180,3 +180,22 @@ def test_default_caps_do_not_trigger(spark):
                max_relation_group_rows=None)).collect()}
     docs.unpersist()
     assert on == off
+
+
+def test_over_cap_roots_listed_in_root_order():
+    """``convert_document`` under 'skip' names the over-cap relation roots
+    in document order and emits only the roots within the cap."""
+    import json as _json
+
+    from osm2geojson_lite_spark.operators.convert import Options, convert_document
+
+    elements = [{"type": "node", "id": i, "lat": i, "lon": i} for i in (1, 2, 3)]
+    elements += [{"type": "relation", "id": 10 + i, "tags": {"type": "route"},
+                  "members": [{"type": "node", "ref": r, "role": ""} for r in refs]}
+                 for i, refs in enumerate([[1, 2], [3], [2, 3]])]
+    geojson, n, over = convert_document(
+        "d", _json.dumps({"elements": elements}),
+        Options(complete_feature=True, max_relation_group_rows=1,
+                mega_doc_policy="skip"))
+    assert (n, over) == (6, [3, 5])  # instances of relations 10 and 12
+    assert [f["id"] for f in _json.loads(geojson)["features"]] == ["node/3"]

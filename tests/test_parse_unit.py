@@ -5,11 +5,9 @@ from __future__ import annotations
 import json
 
 from osm2geojson_lite_spark.functions.jsnumber import canonical_json, js_str, parse_float_js
-from osm2geojson_lite_spark.operators.parse import (
-    detect_format,
-    parse_document,
-    xml_scan,
-)
+from osm2geojson_lite_spark.operators.parse import detect_format, xml_scan
+
+from .conftest import parse_document
 
 
 def collect_events(xml):

@@ -48,6 +48,8 @@ from osm2geojson_lite_spark.spatial.cells import (
 
 import numpy as np
 
+from .conftest import parse_document
+
 
 # ---------------------------------------------------------------------------
 # ring stitching
@@ -334,7 +336,7 @@ def test_event_kernel_matches_independent_scanner(trees):
 # (100 TB posture — one bad doc cannot kill a partition)
 # ---------------------------------------------------------------------------
 
-from osm2geojson_lite_spark.operators.parse import INSTANCE_SCHEMA, parse_document
+from osm2geojson_lite_spark.operators.parse import INSTANCE_SCHEMA
 
 _INSTANCE_FIELDS = [f.split()[0] for f in INSTANCE_SCHEMA.split(", ")]
 

@@ -2,7 +2,8 @@
 automated health checks — parquet filter pushdown, column-pruned scans,
 broadcast joins where the dimension side is small, Arrow evals for kernels.
 
-Writes PLANS.md (plan excerpts + findings).  Run after plan-affecting
+Writes tools/.work/PLANS.md (plan excerpts + findings; gitignored, since
+the plans depend on the host's parallelism).  Run after plan-affecting
 changes: python tools/explain_audit.py
 """
 
@@ -15,6 +16,7 @@ import sys
 from contextlib import redirect_stdout
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+REPORT = os.path.join(ROOT, "tools", ".work", "PLANS.md")
 sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -336,7 +338,8 @@ def main() -> None:
         print(f"{name}: {'; '.join(findings[:4])}")
 
     runtime_section = convert_runtime_audit(spark)
-    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
+    os.makedirs(os.path.dirname(REPORT), exist_ok=True)
+    with open(REPORT, "w") as f:
         f.write("# PLANS — physical-plan audit (`.explain(\"formatted\")`)\n\n"
                 "Generated by tools/explain_audit.py at sf0.01. Health checks:\n"
                 "filter pushdown reaches the parquet scan, scans are column-pruned,\n"
@@ -350,7 +353,7 @@ def main() -> None:
                 "scans under OSM queries are those queries' real inputs.\n\n"
                 + runtime_section + "\n"
                 + "\n".join(sections))
-    print("wrote PLANS.md;", ("PROBLEMS: " + "; ".join(problems)) if problems else "all checks pass")
+    print(f"wrote {os.path.relpath(REPORT, ROOT)};", ("PROBLEMS: " + "; ".join(problems)) if problems else "all checks pass")
 
 
 if __name__ == "__main__":
