@@ -2,10 +2,11 @@
 
 Every document is its own ``RefElements`` universe (SURVEY §1.1): no
 document reads another document's ids.  So ``convert()`` is one
-``mapInPandas`` over the assembled payloads that, per document, parses,
-resolves refs against in-process dicts, assembles Points, ways and
-relations and emits the GeoJSON (:func:`convert_document`).  Its plan
-has no join, no shuffle and no ``groupBy``.
+``mapInArrow`` over the documents' spans that, per document, assembles
+the payload (:func:`span_payload`), parses, resolves refs against
+in-process dicts, assembles Points, ways and relations and emits the
+GeoJSON (:func:`convert_document`).  Its plan has no join, no shuffle and
+no ``groupBy``.
 
 The per-stage operators (``parse``, ``resolve``, ``assemble``, ``emit``)
 still compose the same conversion as a Spark join plan; the benchmark's
@@ -18,7 +19,8 @@ import logging
 from dataclasses import dataclass
 from functools import partial
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark import AccumulatorParam
+from pyspark.sql import DataFrame
 
 from ..functions.jsnumber import canonical_json
 from .assemble import assemble_relation, point_feature_json, way_feature
@@ -60,8 +62,7 @@ class CacheScope:
         self.release()
 
 
-# convert() returns a projection of its cached kernel output, which the
-# caller cannot unpersist, so scopeless calls hand the cache to this scope
+# scopeless convert() calls hand their cached output to this scope
 _DEFAULT_SCOPE = CacheScope()
 
 
@@ -96,21 +97,40 @@ class Options:
     mega_doc_policy: str = "fail"  # "fail" | "skip"
 
 
-def assemble_payload(docs: DataFrame) -> DataFrame:
-    """S1 span assembly: concatenate kind='text' span texts in offset order.
+def span_payload(spans: list | None) -> str | None:
+    """S1 span assembly for one row: its ``kind='text'`` span texts joined
+    in ``(offset, text)`` order, NULLs first, NULL texts skipped.  NULL
+    ``spans`` gives NULL; no text span gives ``""``.  Media spans pass
+    through untouched: span-sequence equality is checked by
+    ``tests/test_lineage_streaming.py::test_span_sequence_invariant``."""
+    if spans is None:
+        return None
+    texts = sorted(((s["offset"], s["text"]) for s in spans
+                    if s is not None and s["kind"] == "text"),
+                   key=lambda ot: (ot[0] is not None, ot[0], ot[1] is not None, ot[1]))
+    return "".join(t for _, t in texts if t is not None)
 
-    Pure column expressions (higher-order functions run JVM-side); media
-    spans pass through untouched — span-sequence equality is checked by
-    tests/test_span_invariant.py.
-    """
-    text_spans = F.filter(F.col("spans"), lambda s: s["kind"] == F.lit("text"))
-    ordered = F.array_sort(
-        F.transform(text_spans, lambda s: F.struct(s["offset"].alias("o"), s["text"].alias("t")))
-    )
-    payload = F.array_join(F.transform(ordered, lambda s: s["t"]), "")
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), payload.alias("payload")
-    )
+
+def _payload_stream(batches):
+    """``mapInArrow`` body of :func:`assemble_payload`.  A payload is at
+    most its row's span texts, so one output batch per input batch stays
+    within Arrow's string-offset limit."""
+    import pyarrow as pa
+
+    for batch in batches:
+        payloads = [span_payload(s) for s in batch.column(1).to_pylist()]
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(0), pa.array(payloads, pa.string())], ["doc_id", "payload"])
+
+
+def _spans(docs: DataFrame) -> DataFrame:
+    return docs.selectExpr("CAST(doc_id AS STRING) AS doc_id", "spans")
+
+
+def assemble_payload(docs: DataFrame) -> DataFrame:
+    """``(doc_id, spans)`` rows -> ``(doc_id string, payload)`` rows,
+    :func:`span_payload` applied through ``mapInArrow``."""
+    return _spans(docs).mapInArrow(_payload_stream, "doc_id string, payload string")
 
 
 class MegaDocumentError(RuntimeError):
@@ -120,40 +140,53 @@ class MegaDocumentError(RuntimeError):
     hold driver-side appeared under policy ``"skip"``."""
 
 
-# "skip" collects the oversized ids to the driver (to report them);
-# a corpus where MORE than this many items blow the cap is not a few bad
-# documents but a mis-sized cap — refuse instead of building an unbounded
-# driver-side list.
+# "skip" reports the oversized ids to the driver; a corpus where MORE than
+# this many items blow the cap is not a few bad documents but a mis-sized
+# cap — refuse instead of building an unbounded driver-side list.
 _SKIP_LIST_BOUND = 1000
 
 
-def _mega_guard(over: DataFrame, noun: str, cap_name: str, cap: int,
-                policy: str) -> list:
-    """Run one mega-document guard job and apply ``mega_doc_policy``.
+class _OverCap(AccumulatorParam):
+    """Accumulator value ``(docs, groups, doc_keys, group_keys)``: the
+    counts of documents over ``max_doc_instances`` and of ``(doc, root)``
+    groups over ``max_relation_group_rows``, plus the first ``keep`` keys
+    of each, so the driver-side value stays bounded however many tasks
+    report."""
 
-    ``over`` holds only the key columns of the items above ``cap``.  Returns
-    their sorted keys (a bare value for one key column, else a tuple) for
-    the caller to report under policy "skip"; raises ``MegaDocumentError``
-    under "fail", or under "skip" when more than ``_SKIP_LIST_BOUND`` items
-    are over the cap.
-    """
-    rows = over.limit(_SKIP_LIST_BOUND + 1).collect()
-    keys = sorted(r[0] if len(r) == 1 else tuple(r) for r in rows)
-    if not keys:
-        return keys
+    def __init__(self, keep: int):
+        self.keep = keep
+
+    def zero(self, value):
+        return (0, 0, [], [])
+
+    def addInPlace(self, a, b):
+        return (a[0] + b[0], a[1] + b[1],
+                (a[2] + b[2])[:self.keep], (a[3] + b[3])[:self.keep])
+
+
+def _apply_policy(count: int, keys: list, noun: str, cap_name: str, cap: int,
+                  policy: str) -> list:
+    """Apply ``mega_doc_policy`` to ``count`` items over ``cap``; ``keys``
+    holds all of them, or ``_SKIP_LIST_BOUND + 1`` when there are more.
+    Returns the keys sorted (for the caller to report under "skip"); raises
+    ``MegaDocumentError`` under "fail", or under "skip" when more than
+    ``_SKIP_LIST_BOUND`` items are over the cap."""
+    if not count:
+        return []
+    keys = sorted(keys)
     if policy != "skip":
         raise MegaDocumentError(
-            f"{len(keys)} {noun}(s) exceed {cap_name}={cap} (first: "
+            f"{count} {noun}(s) exceed {cap_name}={cap} (first: "
             f"{keys[:10]}); raise the cap or set mega_doc_policy='skip'"
         )
-    if len(keys) > _SKIP_LIST_BOUND:
+    if count > _SKIP_LIST_BOUND:
         raise MegaDocumentError(
             f"more than {_SKIP_LIST_BOUND} {noun}s exceed {cap_name}={cap}; "
             "the cap is mis-sized for this corpus — refusing to skip them all"
         )
     logging.getLogger(__name__).warning(
         "mega-document skip: dropping %d %s(s) over %s=%d (first: %s)",
-        len(keys), noun, cap_name, cap, keys[:10],
+        count, noun, cap_name, cap, keys[:10],
     )
     return keys
 
@@ -164,13 +197,10 @@ def _mega_guard(over: DataFrame, noun: str, cap_name: str, cap: int,
 
 EMPTY_COLLECTION = '{"type":"FeatureCollection","features":[]}'
 
-OUTPUT_SCHEMA = (
-    "doc_id string, geojson string, n_instances long, over_roots array<bigint>"
-)
-_OUTPUT_COLS = ["doc_id", "geojson", "n_instances", "over_roots"]
+OUTPUT_SCHEMA = "doc_id string, geojson string"
 
-# The kernel yields an output frame once its GeoJSON passes this many
-# characters (at most 4 UTF-8 bytes each), not one frame per input batch: a
+# The kernel yields an output batch once its GeoJSON passes this many
+# characters (at most 4 UTF-8 bytes each), not one batch per input batch: a
 # batch of up to maxRecordsPerBatch documents could otherwise approach
 # Arrow's 2 GB string-offset limit.
 FLUSH_CHARS = 64 << 20
@@ -327,28 +357,46 @@ def convert_document(doc_id, payload, opts: Options) -> tuple[str, int, list]:
             + ",".join(f[2] for f in feats) + "]}"), n, over
 
 
-def _convert_stream(batches, opts: Options, flush_chars: int):
-    """``mapInPandas`` body: :func:`convert_document` for every
-    ``(doc_id, payload)`` row, one output row per input row.  Frames are
-    yielded once their GeoJSON passes ``flush_chars`` characters."""
-    import pandas as pd
+def _convert_stream(batches, opts: Options, flush_chars: int, keep: int, report):
+    """``mapInArrow`` body: :func:`convert_document` over the
+    :func:`span_payload` of every ``(doc_id, spans)`` row, one output row
+    per input row.  Batches are yielded once their GeoJSON passes
+    ``flush_chars`` characters.  At the end the task passes its over-cap
+    counts and first ``keep`` keys of each kind to ``report`` (the
+    :class:`_OverCap` accumulator's ``add``)."""
+    import pyarrow as pa
 
-    cols: dict[str, list] = {c: [] for c in _OUTPUT_COLS}
+    doc_cap = opts.max_doc_instances
+    n_docs = n_groups = 0
+    doc_keys: list = []
+    group_keys: list = []
+    ids: list = []
+    geojsons: list = []
     size = 0
-    for pdf in batches:
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            geojson, n, over = convert_document(doc_id, payload, opts)
-            cols["doc_id"].append(doc_id)
-            cols["geojson"].append(geojson)
-            cols["n_instances"].append(n)
-            cols["over_roots"].append(over)
+
+    def frame():
+        return pa.RecordBatch.from_arrays(
+            [pa.array(ids, pa.string()), pa.array(geojsons, pa.string())],
+            ["doc_id", "geojson"])
+
+    for batch in batches:
+        for doc_id, spans in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
+            geojson, n, over = convert_document(doc_id, span_payload(spans), opts)
+            if doc_cap is not None and n > doc_cap:
+                n_docs += 1
+                if len(doc_keys) < keep:
+                    doc_keys.append(doc_id)
+            n_groups += len(over)
+            group_keys.extend((doc_id, root) for root in over[:keep - len(group_keys)])
+            ids.append(doc_id)
+            geojsons.append(geojson)
             size += len(geojson)
             if size >= flush_chars:
-                yield pd.DataFrame(cols, columns=_OUTPUT_COLS)
-                cols = {c: [] for c in _OUTPUT_COLS}
-                size = 0
-    if cols["doc_id"]:
-        yield pd.DataFrame(cols, columns=_OUTPUT_COLS)
+                yield frame()
+                ids, geojsons, size = [], [], 0
+    if ids:
+        yield frame()
+    report((n_docs, n_groups, doc_keys, group_keys))
 
 
 def build_features(
@@ -356,13 +404,14 @@ def build_features(
 ) -> dict:
     """Convert ``docs`` and apply the mega-document caps.
 
-    One ``mapInPandas`` over :func:`assemble_payload` runs
-    :func:`convert_document` per row.  Its output is persisted in ``scope``
-    and filled by one eager job, a no-op write that ``DataFrame.observe``
-    rides to count the documents over ``max_doc_instances`` and the
-    ``(doc, root)`` groups over ``max_relation_group_rows``.  Only a
-    non-zero count runs a guard job (:func:`_mega_guard`) to collect the
-    ids and apply ``mega_doc_policy``.
+    One ``mapInArrow`` over the documents' spans runs
+    :func:`convert_document` per row.  Its ``(doc_id, geojson)`` output is
+    persisted in ``scope`` and filled by one eager job, a no-op write.
+    Each task adds its counts of documents over ``max_doc_instances`` and
+    of ``(doc, root)`` groups over ``max_relation_group_rows``, with their
+    first keys, to one accumulator; ``mega_doc_policy`` is then applied to
+    its value on the driver (:func:`_apply_policy`), so a tripped cap
+    costs no extra job.
 
     Returns ``{"geojson": (doc_id, geojson) frame, "skipped_docs": [...],
     "skipped_relation_groups": [(doc_id, root_inst), ...]}``.
@@ -372,34 +421,23 @@ def build_features(
         # previous scopeless conversion's caches — see CacheScope docstring).
         _DEFAULT_SCOPE.release()
         scope = _DEFAULT_SCOPE
-    out = scope.persist(assemble_payload(docs).mapInPandas(
-        partial(_convert_stream, opts=opts, flush_chars=FLUSH_CHARS),
-        schema=OUTPUT_SCHEMA))
+    keep = _SKIP_LIST_BOUND + 1
+    over_cap = docs.sparkSession.sparkContext.accumulator((0, 0, [], []), _OverCap(keep))
+    out = scope.persist(_spans(docs).mapInArrow(
+        partial(_convert_stream, opts=opts, flush_chars=FLUSH_CHARS, keep=keep,
+                report=over_cap.add),
+        OUTPUT_SCHEMA))
+    out.write.format("noop").mode("overwrite").save()
 
-    doc_cap, group_cap = opts.max_doc_instances, opts.max_relation_group_rows
-    over_doc = (F.col("n_instances") > doc_cap) if doc_cap is not None else F.lit(False)
-    counts = Observation()
-    (out.observe(counts, F.sum(over_doc.cast("long")).alias("docs"),
-                 F.sum(F.size("over_roots")).alias("groups"))
-     .write.format("noop").mode("overwrite").save())
-
-    skipped_docs: list[str] = []
-    if counts.get["docs"]:
-        skipped_docs = _mega_guard(
-            out.filter(over_doc).select("doc_id"),
-            "document", "max_doc_instances", doc_cap, opts.mega_doc_policy,
-        )
-    skipped_groups: list[tuple[str, int]] = []
-    if counts.get["groups"]:
-        skipped_groups = _mega_guard(
-            out.select("doc_id", F.explode("over_roots")),
-            "relation group", "max_relation_group_rows", group_cap,
-            opts.mega_doc_policy,
-        )
+    n_docs, n_groups, doc_keys, group_keys = over_cap.value
+    policy = opts.mega_doc_policy
     return {
-        "geojson": out.select("doc_id", "geojson"),
-        "skipped_docs": skipped_docs,
-        "skipped_relation_groups": skipped_groups,
+        "geojson": out,
+        "skipped_docs": _apply_policy(n_docs, doc_keys, "document", "max_doc_instances",
+                                      opts.max_doc_instances, policy),
+        "skipped_relation_groups": _apply_policy(
+            n_groups, group_keys, "relation group", "max_relation_group_rows",
+            opts.max_relation_group_rows, policy),
     }
 
 
@@ -421,6 +459,6 @@ def convert(
     output back to a non-string source should cast their side.
 
     The conversion itself runs eagerly (:func:`build_features`); the
-    returned frame reads its persisted output.
+    returned frame is its persisted output.
     """
     return build_features(docs, opts, scope=scope)["geojson"]

@@ -1,8 +1,8 @@
 """SparkSession factory tuned for the engine.
 
-Local-mode defaults match the sandbox (local[32], single JVM); on a real
-cluster the same conf applies minus master/driver-memory, submitted via
-``spark-submit --py-files``.
+Local-mode defaults match the host (one core per CPU this process may run
+on, single JVM); on a real cluster the same conf applies minus
+master/driver-memory, submitted via ``spark-submit --py-files``.
 """
 
 from __future__ import annotations
@@ -28,6 +28,15 @@ def driver_memory(env: Mapping[str, str], phys_bytes: int) -> str:
     return f"{max(1, min(48, phys_bytes // (1 << 30) // 2))}g"
 
 
+def local_cpus(env: Mapping[str, str], usable: int) -> int:
+    """Cores of a local session: ``SPARK_GRAFT_CPUS`` when set, else
+    ``usable``, the CPUs this process may run on, so that a session (and
+    its default shuffle partition count) never assumes cores the host
+    does not give it."""
+    explicit = env.get("SPARK_GRAFT_CPUS")
+    return int(explicit) if explicit else usable
+
+
 # One conversion compiles about 150 whole-stage and expression classes,
 # more than Spark's default 100-entry codegen cache holds, so every pass
 # used to evict and recompile its own classes (Janino took 0.4-0.7 s of a
@@ -51,7 +60,7 @@ def get_spark(app_name: str = "osm2geojson-lite-spark", *, cpus: int | None = No
     multi-GB partitions AQE pays for itself; skew in the join plan is
     additionally handled explicitly (salting)."""
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = local_cpus(os.environ, len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     builder = (

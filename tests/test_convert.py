@@ -181,6 +181,53 @@ def test_stream_matches_join_plan(spark, payloads, complete_feature, render_tagg
 
 
 # ---------------------------------------------------------------------------
+# span assembly against its former JVM expression
+# ---------------------------------------------------------------------------
+
+
+def _jvm_payload(docs):
+    """The span assembly ``assemble_payload`` ran as JVM higher-order
+    functions before it moved into the Python kernel: the oracle."""
+    from pyspark.sql import functions as F
+
+    text_spans = F.filter(F.col("spans"), lambda s: s["kind"] == F.lit("text"))
+    ordered = F.array_sort(
+        F.transform(text_spans, lambda s: F.struct(s["offset"].alias("o"), s["text"].alias("t"))))
+    payload = F.array_join(F.transform(ordered, lambda s: s["t"]), "")
+    return docs.select(F.col("doc_id").cast("string").alias("doc_id"), payload.alias("payload"))
+
+
+_span = st.one_of(
+    st.none(),
+    st.fixed_dictionaries({
+        "kind": st.sampled_from(["text", "media", None]),
+        "text": st.sampled_from(["", "a", "b", "ab", "é", "e", "😀", "z", None]),
+        "media_ref": st.sampled_from(["img://x", None]),
+        "offset": st.one_of(st.none(), st.integers(-2, 2)),
+    }),
+)
+_spans = st.one_of(st.none(), st.lists(_span, max_size=6))
+
+
+@settings(max_examples=20, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow])
+@given(st.lists(_spans, min_size=1, max_size=8))
+def test_span_payload_matches_jvm_expression(spark, rows):
+    """NULL and empty span arrays, NULL elements, NULL kind, offset and
+    text, offsets tied and broken by text (``é`` and ``😀`` sort by code
+    point as Spark's UTF-8 bytes do) and media spans: the Python helper
+    assembles what the JVM expression did."""
+    fixed = [None, [], [None], [{"kind": "media", "text": "m", "media_ref": "img://m", "offset": 0}],
+             [{"kind": "text", "text": t, "media_ref": None, "offset": 1} for t in ("😀", "é", "e")],
+             [{"kind": "text", "text": t, "media_ref": None, "offset": o}
+              for t, o in (("a", 0), (None, 0), ("b", None), ("c", -1))]]
+    docs = spark.createDataFrame([(str(i), r) for i, r in enumerate(fixed + rows)], SPAN_SCHEMA)
+    want = dict(_jvm_payload(docs).collect())
+    assert dict(convert_mod.assemble_payload(docs).collect()) == want
+    assert {str(i): convert_mod.span_payload(r) for i, r in enumerate(fixed + rows)} == want
+
+
+# ---------------------------------------------------------------------------
 # plan shape and output batching
 # ---------------------------------------------------------------------------
 
@@ -209,20 +256,58 @@ def test_convert_runs_two_jobs_without_shuffle(spark):
     assert len(stages) == len(jobs)
 
 
+def test_convert_driver_round_trips(spark):
+    """The driver builds a conversion in few py4j round trips (about 47;
+    span assembly as JVM lambdas plus ``DataFrame.observe`` took about
+    360).  ``gc`` is off so that no finalizer's delete command lands in the
+    count."""
+    import gc
+
+    from py4j.clientserver import JavaClient
+
+    docs = generate_documents(spark, 20, partitions=2).persist()
+    docs.count()
+    send = JavaClient.send_command
+    sent = []
+
+    def counting(self, command, *args, **kwargs):
+        sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    gc.disable()
+    JavaClient.send_command = counting
+    try:
+        with CacheScope() as scope:
+            convert(docs, Options(complete_feature=True), scope=scope)
+    finally:
+        JavaClient.send_command = send
+        gc.enable()
+        docs.unpersist()
+    assert len(sent) <= 100
+
+
 def test_output_frames_flush_by_geojson_size():
-    """Frames are cut by accumulated GeoJSON, not per input batch: a
-    document whose output crosses the budget closes its frame."""
+    """Batches are cut by accumulated GeoJSON, not per input batch: a
+    document whose output crosses the budget closes its batch."""
+    import pyarrow as pa
+
     opts = Options(complete_feature=True)
-    batch = pd.DataFrame({"doc_id": ["a", "b", "c"],
-                          "payload": [_doc_payload(i, 42) for i in range(3)]})
-    [whole] = list(convert_mod._convert_stream(
-        iter([batch.iloc[:1], batch.iloc[1:]]), opts, convert_mod.FLUSH_CHARS))
-    assert list(whole["doc_id"]) == ["a", "b", "c"]
-    budget = len(whole["geojson"][0]) + 1  # doc a stays under it, doc b crosses it
-    frames = list(convert_mod._convert_stream(iter([batch]), opts, budget))
-    assert [list(f["doc_id"]) for f in frames] == [["a", "b"], ["c"]]
-    assert (pd.concat(frames, ignore_index=True).to_dict("list")
-            == whole.to_dict("list"))
+    spans = pa.array([wrap_payload(d, _doc_payload(i, 42))["spans"]
+                      for i, d in enumerate("abc")])
+    batch = pa.RecordBatch.from_arrays([pa.array(list("abc")), spans], ["doc_id", "spans"])
+
+    def stream(batches, budget):
+        reports = []
+        out = list(convert_mod._convert_stream(iter(batches), opts, budget, 10, reports.append))
+        assert reports == [(0, 0, [], [])]
+        return out
+
+    [whole] = stream([batch.slice(0, 1), batch.slice(1)], convert_mod.FLUSH_CHARS)
+    assert whole.column("doc_id").to_pylist() == ["a", "b", "c"]
+    budget = len(whole.column("geojson")[0].as_py()) + 1  # a stays under it, b crosses it
+    frames = stream([batch], budget)
+    assert [f.column("doc_id").to_pylist() for f in frames] == [["a", "b"], ["c"]]
+    assert pa.Table.from_batches(frames).equals(pa.Table.from_batches([whole]))
 
 
 def test_tiny_flush_budget_keeps_output(spark, monkeypatch):

@@ -199,3 +199,74 @@ def test_over_cap_roots_listed_in_root_order():
                 mega_doc_policy="skip"))
     assert (n, over) == (6, [3, 5])  # instances of relations 10 and 12
     assert [f["id"] for f in _json.loads(geojson)["features"]] == ["node/3"]
+
+
+def _mega_docs_over_partitions(spark, n_mega: int, n_rel: int = 0):
+    """``n_mega`` documents of 50 nodes, ``n_rel`` with a 30-member relation
+    and ``n_mega`` small ones, spread over three partitions."""
+    import json as _json
+
+    from osm2geojson_lite_spark.sources.synth import SPAN_SCHEMA
+
+    big = _json.dumps({"elements": [
+        {"type": "node", "id": i, "lat": 1.0, "lon": 2.0} for i in range(50)]})
+    small = _json.dumps({"elements": [{"type": "node", "id": 1, "lat": 3.0, "lon": 4.0}]})
+    payloads = [(f"{kind}{i}", p) for i in range(n_mega)
+                for kind, p in (("mega", big), ("small", small))]
+    payloads += [(f"rel{i}", _mega_relation_json(30)) for i in range(n_rel)]
+    rows = [(d, [{"kind": "text", "text": p, "media_ref": None, "offset": 0}])
+            for d, p in payloads]
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), SPAN_SCHEMA)
+
+
+def test_skip_counts_over_cap_items_across_partitions(spark, caplog):
+    """Every task reports its own over-cap documents and relation groups:
+    spread over three partitions, all are counted and named."""
+    from pyspark.sql import functions as F
+
+    from osm2geojson_lite_spark import CacheScope, Options, build_features
+
+    docs = _mega_docs_over_partitions(spark, 5, n_rel=2)
+    parts = {r[0] for r in docs.filter(~F.col("doc_id").startswith("small"))
+             .select(F.spark_partition_id()).collect()}
+    assert len(parts) >= 2
+    opts = Options(complete_feature=True, max_doc_instances=40,
+                   max_relation_group_rows=10, mega_doc_policy="skip")
+    with CacheScope() as scope, caplog.at_level("WARNING"):
+        out = build_features(docs, opts, scope=scope)
+        assert out["skipped_docs"] == [f"mega{i}" for i in range(5)]
+        assert out["skipped_relation_groups"] == [("rel0", 30), ("rel1", 30)]
+        assert out["geojson"].count() == 12
+    assert "dropping 5 document(s)" in caplog.text
+    assert "dropping 2 relation group(s)" in caplog.text
+
+
+def test_skip_refuses_more_than_the_skip_list_bound(spark, monkeypatch):
+    from osm2geojson_lite_spark import MegaDocumentError, Options, convert
+    from osm2geojson_lite_spark.operators import convert as convert_mod
+
+    monkeypatch.setattr(convert_mod, "_SKIP_LIST_BOUND", 2)
+    docs = _mega_docs_over_partitions(spark, 3)
+    with pytest.raises(MegaDocumentError, match="more than 2 documents"):
+        convert(docs, Options(max_doc_instances=20, mega_doc_policy="skip"))
+
+
+def test_tripped_skip_cap_runs_no_extra_job(spark):
+    """The over-cap counts and ids ride the job that fills the cache: a
+    tripped cap under 'skip' runs one job, no guard job."""
+    from osm2geojson_lite_spark import CacheScope, Options, build_features
+
+    docs = _mega_docs_over_partitions(spark, 2, n_rel=1)
+    sc = spark.sparkContext
+    group = "mega-skip-jobs"
+    opts = Options(max_doc_instances=40, max_relation_group_rows=10, mega_doc_policy="skip")
+    with CacheScope() as scope:
+        sc.setJobGroup(group, group)
+        try:
+            out = build_features(docs, opts, scope=scope)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    assert out["skipped_docs"] == ["mega0", "mega1"]
+    assert out["skipped_relation_groups"] == [("rel0", 30)]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1

@@ -13,7 +13,11 @@ from pathlib import Path
 
 import pytest
 
-from osm2geojson_lite_spark.session import driver_memory, skip_unchanged_zip_rereads
+from osm2geojson_lite_spark.session import (
+    driver_memory,
+    local_cpus,
+    skip_unchanged_zip_rereads,
+)
 
 GIB = 1 << 30
 
@@ -31,6 +35,15 @@ def test_driver_memory_clamped():
 def test_explicit_driver_memory_wins():
     assert driver_memory({"SPARK_DRIVER_MEMORY": "3g"}, 15 * GIB) == "3g"
     assert driver_memory({"SPARK_DRIVER_MEMORY": ""}, 15 * GIB) == "7g"
+
+
+def test_local_cpus_defaults_to_the_usable_cpus():
+    assert local_cpus({}, 4) == 4
+    assert local_cpus({"SPARK_GRAFT_CPUS": ""}, 4) == 4
+
+
+def test_explicit_local_cpus_win():
+    assert local_cpus({"SPARK_GRAFT_CPUS": "2"}, 4) == 2
 
 
 # ---------------------------------------------------------------------------

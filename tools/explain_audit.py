@@ -246,9 +246,9 @@ def plan_of(df) -> str:
 def convert_runtime_audit(spark) -> str:
     """Executed-stage audit of one full conversion.
 
-    ``convert()`` is one per-document ``mapInPandas`` whose persisted
-    output one eager job fills (the mega-document counts ride it through
-    ``DataFrame.observe``); the caller's action then reads that cache.  So
+    ``convert()`` is one per-document ``mapInArrow`` whose persisted
+    output one eager job fills (its tasks add the mega-document counts to
+    an accumulator); the caller's action then reads that cache.  So
     a conversion should run two jobs of one stage each: a shuffle would add
     a map stage to its job.  Counted from the status tracker, since
     ``explain("formatted")`` re-prints a cached relation's build plan at
